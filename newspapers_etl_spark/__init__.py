@@ -20,9 +20,9 @@ Layout:
                     __spark_entry__.py (driver correctness contract)
     cache.py        caller-owned release path for query-internal caches
 
-Cache lifecycle: jaccard/dd_spans/sh_pairs/sh32 persist() intermediates
-that must outlive the query call (the returned DataFrame references
-them); long-lived sessions release them via
+Cache lifecycle: jaccard/dd_spans/sh_pairs/sh32/lshver/ddemb/ndcg
+persist() intermediates that must outlive the query call (the returned
+DataFrame references them); long-lived sessions release them via
 ``newspapers_etl_spark.cache.all_session_caches_cleared`` /
 ``clear_all_session_caches`` (session-GLOBAL by design — which see).
 """

@@ -1,10 +1,11 @@
 """Caller-owned release path for query-internal caches.
 
-Five registered queries persist an intermediate relation because it
+Seven registered queries persist an intermediate relation because it
 feeds multiple subplans of the one DataFrame they return (``jaccard``'s
 shingle sets, ``dd_spn``'s window stream + repeated-key set,
 ``shprs``/``sh32``'s (doc_id, sh) members — see
-operators/dedup.py:manku_neardup_pairs — and ``ndcg``'s
+operators/dedup.py:manku_neardup_pairs — ``lshver``'s banded MinHash
+signatures, ``ddemb``'s embedding LSH bucket relation, and ``ndcg``'s
 posting-bounded relevance relation).  The query contract (return an
 unexecuted DataFrame) makes in-query ``unpersist()`` impossible: the
 cache must outlive the call so the caller's action can use it.  In the
@@ -35,9 +36,9 @@ from pyspark.sql import SparkSession
 
 def clear_all_session_caches(spark: SparkSession) -> None:
     """Release EVERY cached relation on the session — the intermediates
-    persisted inside jaccard/dd_spans/sh_pairs/sh32/ndcg and any caches the
-    caller created.  Safe at any point: a cleared cache re-materializes
-    on next use."""
+    persisted inside jaccard/dd_spans/sh_pairs/sh32/lshver/ddemb/ndcg and
+    any caches the caller created.  Safe at any point: a cleared cache
+    re-materializes on next use."""
     spark.catalog.clearCache()
 
 

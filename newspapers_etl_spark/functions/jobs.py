@@ -10,10 +10,11 @@ tasks back-fill executors freed by the earlier job's tail.  On a
 cluster this is the same back-fill win; nothing here is local-mode
 specific.
 
-``pyspark.inheritable_thread_target`` propagates the driver's JVM
-thread-local properties (job group / description) into the pool threads
-and cleans them up afterwards — the documented way to run driver
-threads (guide §2.6).
+``pyspark.inheritable_thread_target(session)`` propagates the driver's
+JVM thread-local properties (job group / description) and the session's
+job tags into the pool threads — the documented way to run driver
+threads (guide §2.6).  Handed the thunk instead of the session, it drops
+the tags and warns on every call.
 """
 
 from __future__ import annotations
@@ -31,9 +32,14 @@ def par_jobs(*thunks: Callable[[], Any]) -> list[Any]:
     if len(thunks) == 1:
         return [thunks[0]()]
     from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
 
+    session = SparkSession.active()
+    inherit = inheritable_thread_target(session)
+    if inherit is session:  # pinned-thread mode off: nothing to inherit
+        inherit = lambda t: t  # noqa: E731
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         # collect every outcome before raising so no thunk is abandoned
         # mid-write when a sibling fails
         results, first_err = [], None

@@ -770,8 +770,9 @@ def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join) and each reference otherwise re-inlines the full
     embeddings scan plus all tables×bits hyperplane dot products (six
     scans in the un-persisted plan).  The cache holds (vec_id,
-    bucket_0..bucket_T) — a few ints per vector, not the embeddings —
-    so one scan+hash pass feeds every reference at any scale.  The
+    bucket_0..bucket_T) — one '0'/'1' bit-pattern string of
+    EMB_LSH_BITS chars per table, not the embeddings — so one
+    scan+hash pass feeds every reference at any scale.  The
     norm relation (two verify-side references) stays un-persisted:
     it carries the embedding vectors themselves (guide §5)."""
     e = load_table(spark, sf_dir, "embeddings")

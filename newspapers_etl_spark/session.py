@@ -11,6 +11,14 @@ one you'd also want on a 1000-executor cluster reading 100 TB:
 - UTC session timezone: parquet timestamps compare cleanly against the
   DuckDB oracle and avoid DST-dependent results.
 - Arrow enabled: every Pandas-UDF / toPandas boundary is vectorized.
+- Generated-code cache sized to the engine's working set: Spark keeps
+  100 whole-stage classes by default, fewer than one repeat of a batch
+  needs (109 distinct classes per ``dedup_search`` benchmark pass,
+  132 per ``incremental`` pass, 2,051 for one session over all 161
+  registered queries).  At 100 the LRU cache evicts each class before
+  its next use, so every repeat compiles it again and the JIT warms the
+  new class up again.  2,500 holds the whole registry for about 16 MB
+  more Metaspace (figures at the setting).
 
 The reference engine is single-threaded (reference
 src/01-scrape-images.py:502-515 iterates rows in a Python for loop); the
@@ -74,6 +82,19 @@ def get_spark(
         # silently wrong — the type changes), and must convert like
         # load_table does.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Generated-class cache (module docstring).  STATIC conf, so it
+        # can only be set here, at session build.  Measured on 4 cores:
+        # a steady benchmark pass ran 51-56 Janino compiles
+        # (dedup_search) and 103-116 (incremental) at the default, 0 at
+        # 2,500 (now and then 2-6, from a new adaptive plan shape).  One
+        # session over all 161 registered queries (tools/oracle_sweep.py,
+        # sf0.01) needs 2,051 distinct classes; it compiled 3,151 times
+        # at 100 and 2,049 at 2,500, the smallest round cap above that.
+        # Cost at the end of that sweep: Metaspace 213 -> 225 MB
+        # (209 -> 225 MB after a full GC), compressed class space
+        # 27 -> 29 MB, JIT code heap 120 -> 132 MB; about 8 KB of
+        # Metaspace per retained class.
+        .config("spark.sql.codegen.cache.maxEntries", "2500")
         # PySpark 4 wraps EVERY DataFrame/Column API call in a
         # call-site capture (errors/utils._with_origin): a conf.get py4j
         # round-trip + a Python stack walk + a JVM thread-local set per

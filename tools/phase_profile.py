@@ -2,7 +2,12 @@
 first).  Monkey-patches the eager DataFrame/DataFrameWriter entry points
 so every Spark action a query triggers is logged with its duration and
 the repo call site — the local[32] equivalent of reading the UI's job
-timeline (spark.ui is disabled in the bench session).
+timeline (spark.ui is disabled in the bench session).  Each query's
+header also carries its whole-stage codegen compiles: the Janino
+compile count (``CodegenMetrics``) and total compile time
+(``CodeGenerator.compileTime``, an exact running sum, where the metrics
+histogram only samples), as deltas around the query.  A query that
+recompiles shapes the session already compiled shows up there.
 
 Usage:
     python tools/phase_profile.py ivfapp stup mntpol
@@ -47,6 +52,14 @@ def _wrap(cls, name: str) -> None:
     setattr(cls, name, wrapper)
 
 
+def _codegen(spark) -> tuple[int, float]:
+    """(Janino compiles, compile ms) so far in this JVM."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n.getCount(), ns / 1e6
+
+
 def main() -> int:
     # Spark 4: pyspark.sql.DataFrame is the abstract facade; the classic
     # session instantiates pyspark.sql.classic.dataframe.DataFrame which
@@ -72,6 +85,7 @@ def main() -> int:
     for qname in sys.argv[1:]:
         LOG.clear()
         spark.catalog.clearCache()
+        n0, ms0 = _codegen(spark)
         t0 = time.perf_counter()
         df = queries[qname](spark, SF_DIR)
         t_build = time.perf_counter() - t0
@@ -79,12 +93,14 @@ def main() -> int:
         df.write.format("noop").mode("overwrite").save()
         t_noop = time.perf_counter() - t1
         total = time.perf_counter() - t0
+        n1, ms1 = _codegen(spark)
         # the final noop ride-along was logged by the save wrapper; drop it
         body = [r for r in LOG if r[2] != "?"]
         accounted = sum(d for _, d, _ in body)
         print(f"\n=== {qname}: total {total:.2f}s  (fn {t_build:.2f}s + "
               f"noop {t_noop:.2f}s; actions {accounted:.2f}s, "
-              f"gap {total - accounted - t_noop:.2f}s) ===")
+              f"gap {total - accounted - t_noop:.2f}s; codegen {n1 - n0} "
+              f"compiles, {ms1 - ms0:.0f} ms) ===")
         for op, dt, site in sorted(body, key=lambda r: -r[1]):
             print(f"  {dt:7.3f}s  {op:<8s} {site}")
     return 0
