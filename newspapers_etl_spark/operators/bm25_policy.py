@@ -45,8 +45,13 @@ from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
 from newspapers_etl_spark.operators.index_delete import DOC_DEL_PRED
+from newspapers_etl_spark.functions.ledger import (
+    BM25,
+    TOMBS,
+    live_roots,
+    read_live,
+)
 from newspapers_etl_spark.operators.retrieval import (
-    _live_posting_roots,
     compact_bm25_postings,
     delete_bm25_docs,
     write_bm25_postings,
@@ -118,6 +123,14 @@ def _round6(spark: SparkSession, num: float, den: float) -> float:
     )
 
 
+def _stored(spark: SparkSession, path: str, ptr: dict | None) -> DataFrame:
+    """Every stored posting row a reader scans, dead or alive."""
+    return reduce(
+        DataFrame.unionByName,
+        [spark.read.parquet(f"{path}/{r}") for r in live_roots(BM25, ptr)],
+    )
+
+
 def bm25_policy_chain(
     spark: SparkSession,
     path: str,
@@ -139,7 +152,6 @@ def bm25_policy_chain(
     from newspapers_etl_spark.sinks.verified import (
         current_pointer,
         has_parquet_data,
-        tombstoned_union,
     )
 
     nothing = [("frag", None, False), ("dead", None, False),
@@ -164,7 +176,7 @@ def bm25_policy_chain(
     # Tombstone roots are bounded id relations — counting them is the
     # O(1)-in-index-size alert cost.
     dead_docs = sum(
-        spark.read.parquet(f"{path}/tombs-batch-{t}").count() for t in tombs
+        spark.read.parquet(f"{path}/{TOMBS}{t}").count() for t in tombs
     )
     if live_n <= 0:
         # FULLY tombstoned (tombstones present, zero live docs) — the
@@ -184,15 +196,8 @@ def bm25_policy_chain(
     if alert:
         # The gated decision scan: how much of the stored posting
         # relation does the reader's anti-join actually suppress?
-        roots = _live_posting_roots(ptr)
-        stored = reduce(
-            DataFrame.unionByName,
-            [spark.read.parquet(f"{path}/{r}") for r in roots],
-        )
-        total = stored.count()
-        surviving = tombstoned_union(
-            spark, path, ptr, roots, "doc_id"
-        ).count()
+        total = _stored(spark, path, ptr).count()
+        surviving = read_live(spark, path, BM25).count()
         if total > 0:
             dead_frac = _round6(spark, float(total - surviving), float(total))
             verdict = dead_frac > dead_threshold
@@ -203,14 +208,7 @@ def bm25_policy_chain(
         rows.append(("dead", None, False))
     if verdict:
         compact_bm25_postings(spark, path)
-        ptr2 = current_pointer(stats_root)
-        survived = reduce(
-            DataFrame.unionByName,
-            [
-                spark.read.parquet(f"{path}/{r}")
-                for r in _live_posting_roots(ptr2)
-            ],
-        ).count()
+        survived = _stored(spark, path, current_pointer(stats_root)).count()
         rows.append(("compact", float(survived), True))
     else:
         rows.append(("compact", None, False))

@@ -42,11 +42,19 @@ from newspapers_etl_spark.catalog import load_table
 # registration into this module's registry slot).
 from newspapers_etl_spark.functions.bm25_common import bm25_oracle_sql
 from newspapers_etl_spark.functions.jobs import par_jobs
+from newspapers_etl_spark.functions.ledger import (
+    BM25,
+    IVF,
+    read_live,
+    write_root_or_empty,
+)
 from newspapers_etl_spark.operators.ivf_maintenance import (
-    _OC_CELLS,
     FIT_PREDICATE,
     IVF_FROZEN_CTES,
+    _fold_stats_rows,
     _read_model,
+    _write_codes,
+    _write_stats_local,
     build_ivf_index,
     fit_models,
     read_ivf_codes,
@@ -85,10 +93,7 @@ def merge_ivf_indexes(
                 f"than {shard_paths[0]!r}; re-encode or rebuild before "
                 "merging"
             )
-    from newspapers_etl_spark.sinks.verified import (
-        current_data_path,
-        has_parquet_data,
-    )
+    from newspapers_etl_spark.sinks.verified import current_data_path
 
     cents, codebook = models[0]
     union = reduce(
@@ -109,10 +114,6 @@ def merge_ivf_indexes(
         read_tiny_rows,
         write_model,
     )
-    from newspapers_etl_spark.operators.ivf_maintenance import (
-        _fold_stats_rows,
-        _write_stats_local,
-    )
 
     write_model(f"{dest}/model/centroids", "cell", "cvec", cents)
     write_model(f"{dest}/model/codebook", "code", "kvec", codebook)
@@ -126,18 +127,9 @@ def merge_ivf_indexes(
         ),
     )
 
-    union.repartition(_OC_CELLS, "cell").write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(f"{dest}/codes")
-    if not has_parquet_data(f"{dest}/codes"):
-        # Every shard's live code relation empty (fully-deleted
-        # shards): a partitioned write of an empty relation leaves
-        # a fileless root (UNABLE_TO_INFER_SCHEMA for readers) —
-        # keep the merged index readable as zero rows, the same
-        # guard the BM25 twin carries (ADVICE r15 #1).
-        spark.createDataFrame(
-            [], "vec_id long, cell int, codes array<int>"
-        ).write.mode("overwrite").parquet(f"{dest}/codes")
+    # Every shard's live code relation may be empty (fully-deleted
+    # shards): the guard keeps the merged index readable as zero rows.
+    write_root_or_empty(IVF, _write_codes, union, f"{dest}/codes")
 
 
 def merge_bm25_indexes(
@@ -170,25 +162,14 @@ def merge_bm25_indexes(
     so MAINTAINED shard indexes merge correctly."""
     from newspapers_etl_spark.operators.retrieval import (
         BM25_POSTING_SHARDS,
-        _live_posting_roots,
-    )
-    from newspapers_etl_spark.sinks.verified import (
-        current_pointer,
-        has_parquet_data,
-        tombstoned_union,
+        _write_bm25_stats,
+        _write_postings,
     )
 
     if not shard_paths:
         raise ValueError("merge_bm25_indexes needs at least one shard")
     shards = BM25_POSTING_SHARDS if shards is None else shards
-    parts = []
-    for p in shard_paths:
-        ptr = current_pointer(f"{p}/stats")
-        parts.append(
-            tombstoned_union(
-                spark, p, ptr, _live_posting_roots(ptr), "doc_id"
-            )
-        )
+    parts = [read_live(spark, p, BM25) for p in shard_paths]
     union = reduce(DataFrame.union, parts).select(
         "doc_id",
         "term",
@@ -206,11 +187,7 @@ def merge_bm25_indexes(
     # driver-local parquet write (functions/tinyio.py) instead of a
     # union+aggregate Spark job (guide §1.2/§5).  Shard order is the
     # deterministic fold order; exactness makes any order identical.
-    from newspapers_etl_spark.functions.tinyio import (
-        bm25_stats_schema,
-        read_tiny_rows,
-        write_tiny_parquet,
-    )
+    from newspapers_etl_spark.functions.tinyio import read_tiny_rows
     from newspapers_etl_spark.sinks.verified import current_data_path
 
     n_tot, dl_tot = 0.0, 0.0
@@ -218,27 +195,14 @@ def merge_bm25_indexes(
         for r in read_tiny_rows(current_data_path(f"{p}/stats")):
             n_tot += float(r["n"])
             dl_tot += float(r["sum_dl"] or 0.0)
-    write_tiny_parquet(
-        f"{dest}/stats",
-        {"n": [n_tot], "sum_dl": [dl_tot]},
-        bm25_stats_schema(),
-    )
+    _write_bm25_stats(f"{dest}/stats", {"n": n_tot, "sum_dl": dl_tot})
 
-    from newspapers_etl_spark.operators.retrieval import _shard_write_width
-
-    union.repartition(
-        _shard_write_width(union, shards), "term_shard"
-    ).write.mode("overwrite").partitionBy("term_shard").parquet(
-        f"{dest}/postings"
+    write_root_or_empty(
+        BM25,
+        lambda df, root: _write_postings(df, root, shards),
+        union,
+        f"{dest}/postings",
     )
-    if not has_parquet_data(f"{dest}/postings"):
-        # All shards empty: keep the merged index readable as zero
-        # rows (the write_bm25_postings fileless-root guard).
-        spark.createDataFrame(
-            [],
-            "doc_id bigint, term string, tf double, dl double, "
-            "term_shard int",
-        ).write.mode("overwrite").parquet(f"{dest}/postings")
 
 
 def index_cell_digest(codes: DataFrame, stats: DataFrame) -> DataFrame:

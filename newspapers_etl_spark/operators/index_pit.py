@@ -51,11 +51,19 @@ from newspapers_etl_spark.functions.bm25_common import (
     BM25_QUERY_TERMS,
     BM25_TOP_K,
 )
+from newspapers_etl_spark.functions.ledger import (
+    BM25,
+    IVF,
+    TOMBS,
+    IndexKind,
+    base_root,
+    kind_of,
+    root_epoch,
+)
 from newspapers_etl_spark.operators.ivf_maintenance import (
     BASE_PREDICATE,
     FIT_PREDICATE,
     IVF_APP_ORACLE,
-    _root_epoch,
     append_ivf_index,
     build_ivf_index,
     codes_fingerprint,
@@ -95,20 +103,18 @@ SELECT * FROM (
 
 
 def _as_of_view(
-    ptr: dict | None,
+    spark: SparkSession,
     path: str,
     batch_id: str,
-    root_key: str,
-    default_root: str,
-    batch_prefix: str,
+    kind: IndexKind,
     op: str | None = None,
-) -> tuple[list[dict], list[str], dict]:
+) -> tuple[list[dict], DataFrame]:
     """The shared ops_log reconstruction both maintained indexes use:
-    returns (journal prefix up to the target in the current epoch,
-    data roots to union, a synthetic pointer carrying the tombstones to
-    anti-join under their recorded scopes).  Raises the three honest
-    refusals — unknown batch, ambiguous batch, and a view the last
-    compaction/rebuild folded.
+    returns (journal prefix up to the target in its epoch, the data
+    relation as of the target — its roots unioned, each minus the
+    tombstones its recorded scopes say cover it).  Raises the three
+    honest refusals — unknown batch, ambiguous batch, and a view the
+    last compaction/rebuild folded.
 
     ``op`` disambiguates a batch id published by BOTH ledgers: the
     append and delete idempotency ledgers are separate, so one raw id
@@ -120,6 +126,9 @@ def _as_of_view(
     ``<id>.del``/``<id>.add`` — and a repeat publish of the same
     (op, id) no-ops at the ledger, so two matches for one (op, id)
     cannot occur."""
+    from newspapers_etl_spark.sinks import verified
+
+    ptr = verified.current_pointer(f"{path}/stats")
     log = list(ptr.get("ops_log", [])) if ptr else []
     matches = [
         i
@@ -141,10 +150,10 @@ def _as_of_view(
             "separate) — pass op='add' or op='del' to name the view"
         )
     idx = matches[0]
-    epoch = _root_epoch(ptr)
+    epoch = root_epoch(ptr)
     target_ep = log[idx].get("ep")
     if target_ep == epoch:
-        ep_base = ptr.get(root_key, default_root) if ptr else default_root
+        ep_base = base_root(kind, ptr)
         covers = dict(ptr.get("tombstone_covers", {})) if ptr else {}
     else:
         # The batch's epoch was closed by a compaction/rebuild.  If that
@@ -167,7 +176,7 @@ def _as_of_view(
         covers = dict(retained[target_ep].get("covers", {}))
     prefix = [o for o in log[: idx + 1] if o.get("ep") == target_ep]
     roots = [ep_base] + [
-        f"{batch_prefix}{o['b']}"
+        f"{kind.batch_prefix}{o['b']}"
         for o in prefix
         if o["op"] == "add" and o.get("r")
     ]
@@ -176,7 +185,9 @@ def _as_of_view(
         "live_tombstones": tombs,
         "tombstone_covers": {t: covers[t] for t in tombs if t in covers},
     }
-    return prefix, roots, pit_ptr
+    return prefix, verified.tombstoned_union(
+        spark, path, pit_ptr, roots, kind.id_col
+    )
 
 
 def reap_retained_epochs(path: str, keep: int = 0) -> list[str]:
@@ -195,7 +206,7 @@ def reap_retained_epochs(path: str, keep: int = 0) -> list[str]:
     time-based grace period maps it to however many keep_old_roots
     rewrites its maintenance cadence runs inside the grace window
     (e.g. nightly compaction + 7-day audit window → keep=7).  Works on
-    either maintained index (the pointer's root key names the flavor).
+    either maintained index (the pointer's root key names the kind).
     Returns the dropped epochs.  SINGLE WRITER ASSUMED, like every
     pointer maintenance step."""
     from newspapers_etl_spark.sinks.verified import (
@@ -215,34 +226,28 @@ def reap_retained_epochs(path: str, keep: int = 0) -> list[str]:
     drop = order[: max(len(order) - max(keep, 0), 0)]
     if not drop:
         return []
-    prefix = (
-        "postings-batch-" if "postings_root" in ptr else "codes-batch-"
-    )
-    root_key = "postings_root" if "postings_root" in ptr else "codes_root"
+    kind = kind_of(ptr)
     kept = {e: v for e, v in retained.items() if e not in drop}
     # Top-level components something live (or still-retained) points
     # into must survive — e.g. a compaction that closed an epoch whose
     # base was rebuild-0001/codes leaves the LIVE model at
     # rebuild-0001/model, so only the codes subtree is reapable.
     protected = {
-        str(ptr.get(root_key, "")).split("/")[0],
+        str(ptr.get(kind.root_key, "")).split("/")[0],
         str(ptr.get("model_root", "")).split("/")[0],
     } | {str(v.get("base", "")).split("/")[0] for v in kept.values()}
     log = list(ptr.get("ops_log", []))
     reap = set(ptr.get("reap_roots", []))  # merge a crashed flip's list
     for ep in drop:
-        base_root = str(retained[ep]["base"])
-        top = base_root.split("/")[0]
-        reap.add(top if top not in protected else base_root)
+        ep_base = str(retained[ep]["base"])
+        top = ep_base.split("/")[0]
+        reap.add(top if top not in protected else ep_base)
         for o in log:
             if o.get("ep") == ep and o.get("r"):
-                reap.add(
-                    f"{prefix}{o['b']}"
-                    if o["op"] == "add"
-                    else f"tombs-batch-{o['b']}"
-                )
+                add = o["op"] == "add"
+                reap.add(f"{kind.batch_prefix if add else TOMBS}{o['b']}")
         for t in retained[ep].get("covers", {}):
-            reap.add(f"tombs-batch-{t}")
+            reap.add(f"{TOMBS}{t}")
     dropped = set(drop)
     update_pointer_meta(
         stats_root,
@@ -262,16 +267,7 @@ def read_ivf_codes_at(
     docstring for the reconstruction and its history boundary.  ``op``
     ("add"/"del") names the view when one id was published by both
     ledgers."""
-    from newspapers_etl_spark.sinks.verified import (
-        current_pointer,
-        tombstoned_union,
-    )
-
-    ptr = current_pointer(f"{path}/stats")
-    _, roots, pit_ptr = _as_of_view(
-        ptr, path, batch_id, "codes_root", "codes", "codes-batch-", op=op
-    )
-    return tombstoned_union(spark, path, pit_ptr, roots, "vec_id")
+    return _as_of_view(spark, path, batch_id, IVF, op=op)[1]
 
 
 def retrieval_bm25_topk_at(
@@ -297,16 +293,7 @@ def retrieval_bm25_topk_at(
         _score_pruned_postings,
         _term_shards,
     )
-    from newspapers_etl_spark.sinks.verified import (
-        current_pointer,
-        tombstoned_union,
-    )
-
-    ptr = current_pointer(f"{path}/stats")
-    prefix, roots, pit_ptr = _as_of_view(
-        ptr, path, batch_id, "postings_root", "postings",
-        "postings-batch-", op=op,
-    )
+    prefix, postings = _as_of_view(spark, path, batch_id, BM25, op=op)
     stat = next(
         (o for o in reversed(prefix) if o.get("n") is not None), None
     )
@@ -315,7 +302,6 @@ def retrieval_bm25_topk_at(
             f"no journaled stats at or before batch {batch_id!r} — the "
             "op journal starts at the first published append/delete"
         )
-    postings = tombstoned_union(spark, path, pit_ptr, roots, "doc_id")
     stats = spark.createDataFrame(
         [(float(stat["n"]), float(stat["sum_dl"]))], "n double, sum_dl double"
     ).select(

@@ -21,9 +21,9 @@ Index layout under ``path``:
   parquet partitioned by cell, so a probe's ADC scan reads only its
   probed cells' partitions (PartitionFilters), M small ints per vector,
   never raw embeddings.
-- ``stats`` — per-cell COMBINABLE (n, svec=Σx) pairs behind the same
-  generation-pointer + applied-batch ledger as the BM25 append
-  (sinks/verified.py): merged stats equal rebuilt stats exactly
+- ``stats`` — per-cell COMBINABLE (n, svec=Σx) pairs behind the
+  generation pointer + applied-batch ledger both indexes publish
+  through (functions/ledger.py): merged stats equal rebuilt stats exactly
   (integer counts, elementwise double sums), so a centroid refresh —
   svec/n per cell — is available at any time without a corpus pass,
   and the append is idempotent under retry.
@@ -51,6 +51,16 @@ from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
 from newspapers_etl_spark.functions.jobs import par_jobs
+from newspapers_etl_spark.functions.ledger import (
+    IVF,
+    TOMBS,
+    apply_batch,
+    base_root,
+    compact,
+    live_roots,
+    read_live,
+    retained_epoch_meta,
+)
 from newspapers_etl_spark.functions.lloyd_sql import (
     SQL_DOT,
     lloyd_centroid_ctes,
@@ -400,16 +410,9 @@ def build_ivf_index(
         # The two remaining roots are real distributed writes over the
         # persisted ``coded`` — submit them concurrently so each job's
         # tail back-fills the other (guide §2.6; the block manager
-        # serializes the first materialization).  One file per cell
-        # partition: the repartition ON the layout key keeps a probe's
-        # ADC read to its probed cells' directories (the
-        # write_bm25_postings shard discipline).
+        # serializes the first materialization).
         par_jobs(
-            lambda: coded.drop("embedding")
-            .repartition(_OC_CELLS, "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{path}/codes"),
+            lambda: _write_codes(coded, f"{path}/codes"),
             lambda: _cell_stats(coded)
             .write.mode("overwrite")
             .parquet(f"{path}/stats"),
@@ -439,60 +442,41 @@ def _read_model(
     return cents, codebook
 
 
-def _root_epoch(ptr: dict | None) -> str:
-    """The root-rewrite epoch a maintenance op publishes under —
-    ``<compactions>.<rebuilds>``.  Appends and deletes within one epoch
-    leave every root they exposed on disk, so the index view as of any
-    such op is reconstructible (operators/index_pit.py); a compaction
-    or rebuild bumps its counter and physically rewrites roots, which
-    truncates point-in-time history at that boundary."""
-    if ptr is None:
-        return "0.0"
-    return f"{int(ptr.get('compactions', 0))}.{int(ptr.get('rebuilds', 0))}"
+def _write_codes(df: DataFrame, root: str) -> None:
+    """A cell-partitioned code root, one file per cell: the repartition
+    ON the layout key keeps a probe's ADC read to its probed cells'
+    directories (the write_bm25_postings shard discipline)."""
+    df.drop("embedding").repartition(_OC_CELLS, "cell").write.mode(
+        "overwrite"
+    ).partitionBy("cell").parquet(root)
 
 
-def _live_ops_log(ptr: dict | None, epoch: str) -> list[dict]:
-    """The op journal TRIMMED to the current root-rewrite epoch plus
-    every RETAINED one — the pointer-size bound that keeps ops_log
-    O(ops since the last unretained compaction/rebuild) instead of
-    O(ops ever): entries from a closed-and-unretained epoch reference
-    roots the rewrite already reaped, so the PIT reader refuses them
-    regardless of whether they are still journaled (a trimmed batch
-    refuses as 'no op journal entry' instead of 'predates the last
-    compaction' — same contract, cheaper pointer).  Entries from a
-    closed epoch in ``retained_epochs`` (a keep_old_roots rewrite —
-    operators/index_pit.py) stay journaled: their roots are still on
-    disk and the PIT reader serves them until ``reap_retained_epochs``
-    drops the epoch, which truncates these entries in the same pointer
-    write.  The trim rides the next append/delete publish; compaction
-    itself never touches the journal."""
-    log = list(ptr.get("ops_log", [])) if ptr else []
-    keep = {epoch} | set((ptr or {}).get("retained_epochs", {}))
-    return [o for o in log if o.get("ep") in keep]
+def _fold_signed(old_rows, batch_rows, sign: int):
+    """The ledger's stats fold: a delete (``sign`` -1) folds in the
+    batch's NEGATED contribution."""
+    return _fold_stats_rows(
+        old_rows, batch_rows if sign > 0 else _neg_stats_rows(batch_rows)
+    )
 
 
-def _retained_epoch_meta(
-    ptr: dict, epoch: str, base: str, batch_prefix: str, live: list[str]
-) -> dict:
-    """The ``retained_epochs`` map after a keep_old_roots rewrite closes
-    ``epoch``: per epoch, the two things the live pointer otherwise
-    loses — the epoch's base root name and each live tombstone's
-    recorded cover scopes — so the PIT reader (operators/index_pit.py)
-    can reconstruct any view inside the closed epoch from its
-    (untrimmed) journal entries plus the roots the skipped reap left on
-    disk.  A tombstone with no recorded covers conservatively covered
-    every root of its epoch, mirroring the live reader's default."""
-    retained = dict(ptr.get("retained_epochs", {}))
-    covers = dict(ptr.get("tombstone_covers", {}))
-    all_roots = [base] + [f"{batch_prefix}{b}" for b in live]
-    retained[epoch] = {
-        "base": base,
-        "covers": {
-            t: covers.get(t, all_roots)
-            for t in list(ptr.get("live_tombstones", []))
-        },
-    }
-    return retained
+def _apply_ivf_batch(
+    spark: SparkSession, e: DataFrame, path: str, op: str, batch_id: str
+) -> None:
+    """The IVF payload of the ledgered batch protocol
+    (functions/ledger.py): the batch is encoded under the frozen models
+    and persisted, so the staging write and the per-cell (n, Σx)
+    aggregation read one pass; the fold with the previous generation
+    and its write are driver-local, leaving one distributed stats job
+    per publish."""
+
+    def coded() -> DataFrame:
+        cents, codebook = _read_model(spark, path)
+        return _encode(e, cents, codebook, with_embedding=True).persist()
+
+    apply_batch(
+        path, IVF, op, batch_id, coded, _write_codes,
+        lambda c: _cell_stats(c).collect(), _fold_signed, _write_stats_local,
+    )
 
 
 def append_ivf_index(
@@ -505,90 +489,10 @@ def append_ivf_index(
     refit — existing codes keep their cells), land the codes in the
     underscore-invisible staging dir, rename atomically, then merge the
     per-cell stats pair and publish through the generation pointer with
-    the applied-batch ledger — the exact idempotency protocol of
-    append_bm25_postings (retry of a torn or completed append replaces
+    the applied-batch ledger — the ledgered-batch protocol of
+    functions/ledger.py (retry of a torn or completed append replaces
     or no-ops, never duplicates)."""
-    # Lazy: sinks.verified registers sink_aud at import time.
-    from newspapers_etl_spark.sinks.verified import (
-        allocate_generation,
-        current_data_path,
-        current_pointer,
-        expose_staged_batch,
-        publish_generation,
-    )
-
-    stats_root = f"{path}/stats"
-    ptr = current_pointer(stats_root)
-    applied = list(ptr.get("applied_batches", [])) if ptr else []
-    # applied_batches = append-only idempotency ledger (survives
-    # compaction); live_batches = roots a reader still unions
-    # (compaction resets it) — see append_bm25_postings.
-    live = list(ptr.get("live_batches", applied)) if ptr else []
-    if batch_id in applied:
-        return
-    epoch = _root_epoch(ptr)
-    ops_log = _live_ops_log(ptr, epoch)
-
-    cents, codebook = _read_model(spark, path)
-    coded = _encode(e_batch, cents, codebook, with_embedding=True).persist()
-    try:
-        staging = f"{path}/_codes-batch-{batch_id}"
-
-        # The previous generation's stats are a cells×dim relation —
-        # read them back driver-locally (functions/tinyio.py); the fold
-        # with the batch contribution and the new generation's write
-        # are driver-local too (``_fold_stats_rows`` — bit-exact twin
-        # of the Spark merge, see its docstring), leaving exactly ONE
-        # distributed stats job per publish: the batch aggregation.
-        from newspapers_etl_spark.functions.tinyio import read_tiny_rows
-
-        old_rows = read_tiny_rows(current_data_path(stats_root))
-        gen_no, new_name = allocate_generation(stats_root)
-
-        def _stage_codes() -> bool:
-            coded.drop("embedding").repartition(
-                _OC_CELLS, "cell"
-            ).write.mode("overwrite").partitionBy("cell").parquet(staging)
-            # Atomic exposure + empty-batch guard via the shared helper
-            # (sinks/verified.expose_staged_batch — the BM25 append runs
-            # the identical sequence): an empty batch is ledgered as
-            # applied but never enters the live read roots.
-            return expose_staged_batch(
-                path, f"_codes-batch-{batch_id}", f"codes-batch-{batch_id}"
-            )
-
-        # The codes staging write and the batch-stats aggregation are
-        # independent jobs (nothing is visible until the single pointer
-        # publish below) — run them concurrently (guide §2.6).  Crash
-        # between them leaves the same torn-but-unpublished state the
-        # serial order could: the retry heals it identically.
-        exposed, batch_rows = par_jobs(
-            _stage_codes,
-            lambda: _cell_stats(coded).collect(),
-        )
-        _write_stats_local(
-            f"{stats_root}/{new_name}",
-            _fold_stats_rows(old_rows, batch_rows),
-        )
-        live_after = live + [batch_id] if exposed else live
-        publish_generation(
-            stats_root,
-            gen_no,
-            new_name,
-            meta={
-                "applied_batches": applied + [batch_id],
-                "live_batches": live_after,
-                # Append-ordered op journal for point-in-time reads
-                # (operators/index_pit.py): generation, op kind, batch,
-                # whether a root was exposed, root-rewrite epoch.
-                "ops_log": ops_log + [
-                    {"g": gen_no, "op": "add", "b": batch_id,
-                     "r": exposed, "ep": epoch}
-                ],
-            },
-        )
-    finally:
-        coded.unpersist()
+    _apply_ivf_batch(spark, e_batch, path, "add", batch_id)
 
 
 def delete_from_ivf_index(
@@ -628,107 +532,7 @@ def delete_from_ivf_index(
     corrupts the subtracted stats — the same edge the append's
     doc-disjointness contract guards.  SINGLE WRITER ASSUMED, like
     every generation-pointer publisher."""
-    from newspapers_etl_spark.sinks.verified import (
-        allocate_generation,
-        current_data_path,
-        current_pointer,
-        expose_staged_batch,
-        publish_generation,
-    )
-
-    stats_root = f"{path}/stats"
-    ptr = current_pointer(stats_root)
-    applied_del = list(ptr.get("applied_deletes", [])) if ptr else []
-    tombs = list(ptr.get("live_tombstones", [])) if ptr else []
-    covers = dict(ptr.get("tombstone_covers", {})) if ptr else {}
-    if batch_id in applied_del:
-        return
-    epoch = _root_epoch(ptr)
-    ops_log = _live_ops_log(ptr, epoch)
-
-    cents, codebook = _read_model(spark, path)
-    coded = _encode(e_deleted, cents, codebook, with_embedding=True).persist()
-    try:
-        if ptr is not None and not coded.head(1):
-            # Empty batch (zero rows / all-null embeddings): nothing to
-            # subtract and nothing to tombstone — ledger the batch_id
-            # with a pointer-meta-only write instead of allocating a
-            # byte-identical stats generation (ADVICE r11: pointer
-            # churn per no-op delete).  The unshuffled staging write
-            # below emits schema-bearing part files even for zero rows,
-            # so expose_staged_batch cannot be the emptiness signal
-            # here; head(1) on the persisted batch is one tiny action.
-            # A legacy pointer-less root falls through to the full
-            # path, whose publish establishes the pointer.
-            from newspapers_etl_spark.sinks.verified import (
-                update_pointer_meta,
-            )
-
-            update_pointer_meta(
-                stats_root,
-                applied_deletes=applied_del + [batch_id],
-                ops_log=ops_log + [
-                    {"g": int(ptr["generation"]), "op": "del",
-                     "b": batch_id, "r": False, "ep": epoch}
-                ],
-            )
-            return
-        staging = f"{path}/_tombs-batch-{batch_id}"
-
-        # Previous stats read back driver-locally; the batch stats are
-        # NEGATED on the driver and folded in (``_neg_stats_rows`` /
-        # ``_fold_stats_rows`` — bit-exact twins of the Spark
-        # projection+merge) and the new generation is one driver-local
-        # write.  Everything-deleted folds to an empty list, which
-        # ``_write_stats_local`` lands as a typed empty parquet — the
-        # same readable-as-zero-rows guarantee the old has_parquet_data
-        # fallback provided.
-        from newspapers_etl_spark.functions.tinyio import read_tiny_rows
-
-        old_rows = read_tiny_rows(current_data_path(stats_root))
-        gen_no, new_name = allocate_generation(stats_root)
-
-        def _stage_tombs() -> bool:
-            coded.select("vec_id").write.mode("overwrite").parquet(staging)
-            return expose_staged_batch(
-                path, f"_tombs-batch-{batch_id}", f"tombs-batch-{batch_id}"
-            )
-
-        # Tombstone staging and the batch-stats aggregation are
-        # independent until the single pointer publish (guide §2.6).
-        exposed, batch_rows = par_jobs(
-            _stage_tombs,
-            lambda: _cell_stats(coded).collect(),
-        )
-        _write_stats_local(
-            f"{stats_root}/{new_name}",
-            _fold_stats_rows(old_rows, _neg_stats_rows(batch_rows)),
-        )
-        if exposed:
-            tombs_after = tombs + [batch_id]
-            # ROOT-SCOPED: this tombstone suppresses only the roots that
-            # exist NOW — a later append of the same id lands in a new
-            # root this tombstone does not cover, so a takedown reversal
-            # is one ordinary append (sinks/verified.tombstoned_union).
-            covers[batch_id] = _live_code_roots(ptr)
-        else:
-            tombs_after = tombs
-        publish_generation(
-            stats_root,
-            gen_no,
-            new_name,
-            meta={
-                "applied_deletes": applied_del + [batch_id],
-                "live_tombstones": tombs_after,
-                "tombstone_covers": covers,
-                "ops_log": ops_log + [
-                    {"g": gen_no, "op": "del", "b": batch_id,
-                     "r": exposed, "ep": epoch}
-                ],
-            },
-        )
-    finally:
-        coded.unpersist()
+    _apply_ivf_batch(spark, e_deleted, path, "del", batch_id)
 
 
 def upsert_ivf_index(
@@ -770,20 +574,6 @@ def upsert_ivf_index(
     append_ivf_index(spark, e_new, path, batch_id=f"{batch_id}.add")
 
 
-def _live_code_roots(ptr: dict | None) -> list[str]:
-    """The code root NAMES (relative to the table root) a reader unions
-    right now — the base root plus every live batch root."""
-    base = ptr.get("codes_root", "codes") if ptr else "codes"
-    batches = (
-        list(ptr.get("live_batches", ptr.get("applied_batches", [])))
-        if ptr
-        else []
-    )
-    return [base] + [f"codes-batch-{b}" for b in batches]
-
-
-
-
 def reap_orphan_rebuilds(path: str) -> None:
     """Delete any ``rebuild-N``/``_rebuild-N`` dirs the pointer does not
     reference — the debris of a rebuild that died between its rename
@@ -803,7 +593,7 @@ def reap_orphan_rebuilds(path: str) -> None:
 
     ptr = current_pointer(f"{path}/stats")
     live = {
-        (ptr or {}).get("codes_root", "codes").split("/")[0],
+        base_root(IVF, ptr).split("/")[0],
         (ptr or {}).get("model_root", "model").split("/")[0],
     } | {
         # A retained epoch's base may live under an old rebuild shell
@@ -867,6 +657,7 @@ def rebuild_ivf_index(
         current_pointer,
         local_fs_path,
         publish_generation,
+        reap_orphan_tombstones,
         reap_pending_roots,
     )
 
@@ -875,8 +666,6 @@ def rebuild_ivf_index(
     if ptr:
         reap_pending_roots(stats_root, path)  # heal a crashed prior reap
     reap_orphan_rebuilds(path)  # heal a rebuild that died pre-publish
-    from newspapers_etl_spark.sinks.verified import reap_orphan_tombstones
-
     reap_orphan_tombstones(path)  # heal a delete that died pre-publish
     live_ids = read_ivf_codes(spark, path).select("vec_id")
     # Persist the semi-joined live corpus: the Lloyd fit alone runs
@@ -914,18 +703,11 @@ def rebuild_ivf_index(
     # Superseded roots: the old codes/model roots (collapsed to their
     # top-level component so a prior rebuild-NNNN shell is removed
     # whole) plus every live batch and tombstone root.
-    old_codes = ptr.get("codes_root", "codes") if ptr else "codes"
     old_model = ptr.get("model_root", "model") if ptr else "model"
-    live = (
-        list(ptr.get("live_batches", ptr.get("applied_batches", [])))
-        if ptr
-        else []
-    )
-    tombs = list(ptr.get("live_tombstones", [])) if ptr else []
     reap = sorted(
-        {old_codes.split("/")[0], old_model.split("/")[0]}
-        | {f"codes-batch-{b}" for b in live}
-        | {f"tombs-batch-{b}" for b in tombs}
+        {base_root(IVF, ptr).split("/")[0], old_model.split("/")[0]}
+        | set(live_roots(IVF, ptr)[1:])
+        | {f"{TOMBS}{b}" for b in (ptr or {}).get("live_tombstones", [])}
     )
     meta = {
         "codes_root": f"{new_root}/codes",
@@ -944,9 +726,7 @@ def rebuild_ivf_index(
         # the retained base's shell; code-relation PIT reads never
         # score, so they need no model.
         meta["reap_roots"] = []
-        meta["retained_epochs"] = _retained_epoch_meta(
-            ptr, _root_epoch(ptr), old_codes, "codes-batch-", live
-        )
+        meta["retained_epochs"] = retained_epoch_meta(IVF, ptr)
     publish_generation(stats_root, gen_no, gen_name, meta=meta)
     reap_pending_roots(stats_root, path)
     return new_root
@@ -957,115 +737,29 @@ def read_ivf_codes(spark: SparkSession, path: str) -> DataFrame:
     the stats pointer's LIVE ledger records, minus the live tombstones
     (anti-joined on vec_id, each scoped to the roots it COVERS — the
     deleted codes stay on disk until the next compaction folds them
-    out, while a post-delete re-append's root is read untouched) — all
-    derived from the POINTER, never a directory listing, so a batch's
-    codes and stats appear atomically together and a compaction's
-    single metadata write flips readers to the folded root (the BM25
-    reader contract; shared reader sinks/verified.tombstoned_union)."""
-    from newspapers_etl_spark.sinks.verified import (
-        current_pointer,
-        tombstoned_union,
-    )
-
-    ptr = current_pointer(f"{path}/stats")
-    return tombstoned_union(
-        spark, path, ptr, _live_code_roots(ptr), "vec_id"
-    )
+    out, while a post-delete re-append's root is read untouched) —
+    functions/ledger.read_live, the reader both indexes share."""
+    return read_live(spark, path, IVF)
 
 
 def compact_ivf_codes(
     spark: SparkSession, path: str, keep_old_roots: bool = False
 ) -> str:
-    """Fold the accumulated code roots back into ONE compacted root —
-    the codes-side twin of compact_bm25_postings, running the identical
-    shared protocol (sinks/verified.flip_compacted_roots): rewrite the
-    union (cell-partitioned, one file per cell), rename atomically,
-    then ONE pointer write flips ``codes_root``, resets
-    ``live_batches`` and records the superseded roots as
-    ``reap_roots`` — ``applied_batches`` untouched so a late retry of a
-    folded batch stays a no-op, and a crash between flip and reap is
-    healed by the next maintenance call instead of orphaning an index
-    copy.  Stats move nowhere (compaction adds no vectors).  Returns
-    the new root's name."""
-    import os
-    import shutil
-    from functools import reduce
+    """Fold the accumulated code roots back into ONE compacted root
+    (cell-partitioned, one file per cell) through the shared compaction
+    of functions/ledger.py: the live tombstones fold in, ONE pointer
+    write flips ``codes_root`` and resets the live ledgers, and the
+    superseded roots are reaped — ``applied_batches`` untouched so a
+    late retry of a folded batch stays a no-op.  Stats move nowhere
+    (compaction adds no vectors).  Returns the new root's name."""
+    from newspapers_etl_spark.sinks.verified import current_pointer
 
-    from newspapers_etl_spark.sinks.verified import (
-        current_pointer,
-        flip_compacted_roots,
-        local_fs_path,
-        reap_pending_roots,
-    )
-
-    stats_root = f"{path}/stats"
-    ptr = current_pointer(stats_root)
-    if ptr is None:
+    if current_pointer(f"{path}/stats") is None:
         # Nothing was ever appended: the base root is already the whole
         # index and there is no pointer to rewrite.
         return "codes"
-    reap_pending_roots(stats_root, path)  # heal a crashed prior reap
     reap_orphan_rebuilds(path)  # heal a rebuild that died pre-publish
-    from newspapers_etl_spark.sinks.verified import reap_orphan_tombstones
-
-    reap_orphan_tombstones(path)  # heal a delete that died pre-publish
-    base = ptr.get("codes_root", "codes")
-    live = list(ptr.get("live_batches", ptr.get("applied_batches", [])))
-    old_roots = [f"{path}/{base}"] + [
-        f"{path}/codes-batch-{b}" for b in live
-    ]
-    n = int(ptr.get("compactions", 0)) + 1
-    new_root = f"codes-compact-{n:04d}"
-    # Fold the live tombstones INTO the compacted root (the deleted
-    # rows finally leave disk, via the same root-scoped reader queries
-    # use) and reset ``live_tombstones``/``tombstone_covers`` in the
-    # same pointer flip; ``applied_deletes`` survives, like
-    # ``applied_batches`` — a late retry of a folded delete must no-op.
-    from newspapers_etl_spark.sinks.verified import tombstoned_union
-
-    tomb_roots = [
-        f"{path}/tombs-batch-{b}"
-        for b in list(ptr.get("live_tombstones", []))
-    ]
-    union = tombstoned_union(
-        spark, path, ptr, [base] + [f"codes-batch-{b}" for b in live], "vec_id"
-    )
-    union.repartition(_OC_CELLS, "cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{path}/_{new_root}")
-    from newspapers_etl_spark.sinks.verified import has_parquet_data
-
-    if not has_parquet_data(f"{path}/_{new_root}"):
-        # Every row deleted: a partitioned write of an empty relation
-        # leaves a fileless root (UNABLE_TO_INFER_SCHEMA for readers) —
-        # replace it with a typed empty parquet so the index stays
-        # readable as zero rows.
-        spark.createDataFrame(
-            [], "vec_id long, cell int, codes array<int>"
-        ).write.mode("overwrite").parquet(f"{path}/_{new_root}")
-    os_path = local_fs_path(path)
-    final_dir = os.path.join(os_path, new_root)
-    shutil.rmtree(final_dir, ignore_errors=True)
-    os.rename(os.path.join(os_path, f"_{new_root}"), final_dir)
-    extra: dict = {"live_tombstones": [], "tombstone_covers": {}}
-    if keep_old_roots:
-        # The skipped reap leaves this epoch's roots on disk; record
-        # what the PIT reader needs to keep serving its views
-        # (operators/index_pit.py) in the SAME atomic flip.
-        extra["retained_epochs"] = _retained_epoch_meta(
-            ptr, _root_epoch(ptr), base, "codes-batch-", live
-        )
-    flip_compacted_roots(
-        stats_root,
-        path,
-        root_key="codes_root",
-        new_root=new_root,
-        compactions=n,
-        old_roots=old_roots + tomb_roots,
-        keep_old_roots=keep_old_roots,
-        extra_meta=extra,
-    )
-    return new_root
+    return compact(spark, path, IVF, _write_codes, keep_old_roots)
 
 
 def scratch_index_dir(prefix: str, sf_dir: str) -> str:

@@ -49,6 +49,13 @@ from newspapers_etl_spark.functions.bm25_common import (  # noqa: F401
     bm25_oracle_sql,
 )
 from newspapers_etl_spark.functions.jobs import par_jobs
+from newspapers_etl_spark.functions.ledger import (
+    BM25,
+    apply_batch,
+    compact,
+    read_live,
+    write_root_or_empty,
+)
 from newspapers_etl_spark.functions.text import words
 from newspapers_etl_spark.registry import query
 
@@ -195,30 +202,6 @@ def write_bm25_postings(
         _staged_of(docs) if docs is not None else _staged_tokens(spark, sf_dir)
     )
     postings = _postings_of(staged, shards)
-    from newspapers_etl_spark.sinks.verified import has_parquet_data
-
-    def _write_postings() -> None:
-        # Repartition ON the layout key before the partitioned write:
-        # without it every task holds rows for all shards and writes up
-        # to `shards` files — tasks × shards small files at corpus
-        # scale.  After it each shard's rows land in one task → one
-        # file per shard directory, and term lookups read exactly one
-        # file.
-        postings.repartition(
-            _shard_write_width(postings, shards), "term_shard"
-        ).write.mode("overwrite").partitionBy("term_shard").parquet(
-            f"{path}/postings"
-        )
-        if not has_parquet_data(f"{path}/postings"):
-            # Empty corpus: a partitioned write of an empty relation
-            # leaves a fileless root (UNABLE_TO_INFER_SCHEMA for
-            # readers) — keep the index readable as zero rows.
-            spark.createDataFrame(
-                [],
-                "doc_id bigint, term string, tf double, dl double, "
-                "term_shard int",
-            ).write.mode("overwrite").parquet(f"{path}/postings")
-
     # Stats are stored as the COMBINABLE pair (n, sum_dl), not avgdl:
     # document lengths are integer-valued doubles, so sums are exact
     # (< 2^53) and an incremental append's merged stats equal the
@@ -227,11 +210,27 @@ def write_bm25_postings(
     # ulp when combined and could flip a rounded score partial).
     # The two roots are independent jobs — overlap them (guide §2.6).
     par_jobs(
-        _write_postings,
+        lambda: write_root_or_empty(
+            BM25,
+            lambda df, root: _write_postings(df, root, shards),
+            postings,
+            f"{path}/postings",
+        ),
         lambda: _corpus_stats(staged)
         .write.mode("overwrite")
         .parquet(f"{path}/stats"),
     )
+
+
+def _write_postings(df: DataFrame, root: str, shards: int) -> None:
+    """A shard-partitioned posting root.  The repartition ON the layout
+    key puts each shard's rows in one task → one file per shard
+    directory, so a term lookup reads exactly one file; without it
+    every task holds rows for all shards and writes tasks × shards
+    small files at corpus scale."""
+    df.repartition(_shard_write_width(df, shards), "term_shard").write.mode(
+        "overwrite"
+    ).partitionBy("term_shard").parquet(root)
 
 
 def _staged_of(docs: DataFrame) -> DataFrame:
@@ -285,8 +284,8 @@ def _read_bm25_stats(stats_root: str) -> dict:
     return read_tiny_rows(current_data_path(stats_root))[0]
 
 
-def _write_bm25_stats(path: str, n: float, sum_dl: float) -> None:
-    """Land a merged (n, sum_dl) pair as a stats generation with one
+def _write_bm25_stats(path: str, stats: dict) -> None:
+    """Land an (n, sum_dl) pair as a stats generation with one
     driver-local parquet write — same layout, atomic temp+rename;
     visibility still gates on the caller's pointer publish."""
     from newspapers_etl_spark.functions.tinyio import (
@@ -294,13 +293,42 @@ def _write_bm25_stats(path: str, n: float, sum_dl: float) -> None:
         write_tiny_parquet,
     )
 
+    sum_dl = stats["sum_dl"]
     write_tiny_parquet(
         path,
         {
-            "n": [float(n)],
+            "n": [float(stats["n"])],
             "sum_dl": [None if sum_dl is None else float(sum_dl)],
         },
         bm25_stats_schema(),
+    )
+
+
+def _fold_bm25_stats(old_rows: list[dict], batch, sign: int) -> dict:
+    """The previous (n, sum_dl) row plus (``sign`` 1) or minus (``sign``
+    -1) the batch's pair — exact, because document lengths are
+    integer-valued doubles (see write_bm25_postings)."""
+    old = old_rows[0]
+    return {
+        "n": float(old["n"]) + sign * float(batch["n"]),
+        "sum_dl": float(old["sum_dl"] or 0.0)
+        + sign * float(batch["sum_dl"] or 0.0),
+    }
+
+
+def _apply_bm25_batch(
+    path: str, op: str, batch_id: str, staged, shards: int = BM25_POSTING_SHARDS
+) -> None:
+    """The BM25 payload of the ledgered batch protocol
+    (functions/ledger.py): the batch is tokenized (``staged()``, not
+    persisted), an add's postings land in the shard layout, and the
+    (n, sum_dl) pair of the batch — one 1-row aggregate beside the
+    staging write — folds into the previous pair on the driver."""
+    apply_batch(
+        path, BM25, op, batch_id, staged,
+        lambda s, root: _write_postings(_postings_of(s, shards), root, shards),
+        lambda s: _corpus_stats(s).collect()[0],
+        _fold_bm25_stats, _write_bm25_stats,
     )
 
 
@@ -325,7 +353,8 @@ def append_bm25_postings(
     gate in operators/incremental.py is the standard guard).
 
     IDEMPOTENT under retry (ADVICE r8 #3 — the old append-mode write
-    doubled tf on every re-run):
+    doubled tf on every re-run), through the ledgered-batch protocol of
+    functions/ledger.py:
 
     - ``batch_id`` names the batch.  The default is a slug of
       ``sf_dir`` PLUS a content fingerprint (row count + max doc_id,
@@ -345,10 +374,11 @@ def append_bm25_postings(
       ``applied_batches`` ledger; a retry of a fully-applied batch is
       a no-op, so stats can never double-count — even a late retry of
       batch A after batch B has published.
-    - crash between rename and publish: postings visible with the
-      PREVIOUS stats (index stays readable — failure-injection pytest),
-      and the retry converges to exactly the rebuild-from-everything
-      index bit-for-bit.
+    - crash between rename and publish: the renamed postings stay
+      invisible (readers derive roots from the pointer) and the index
+      serves the PREVIOUS state (failure-injection pytest); the retry
+      converges to exactly the rebuild-from-everything index
+      bit-for-bit.
 
     SINGLE WRITER ASSUMED, like every generation-pointer publisher
     (sinks/verified.py publish_generation): concurrent appends would
@@ -368,17 +398,6 @@ def append_bm25_postings(
         raise ValueError(
             "append_bm25_postings(docs=...) requires an explicit batch_id"
         )
-
-    # Lazy import: sinks.verified registers its own query (sink_aud) at
-    # import time; a top-level import here would splice that block into
-    # retrieval's registry slot (the driver window is positional).
-    from newspapers_etl_spark.sinks.verified import (
-        allocate_generation,
-        current_pointer,
-        expose_staged_batch,
-        publish_generation,
-    )
-
     if batch_id is None:
         slug = re.sub(r"[^A-Za-z0-9._-]+", "-", sf_dir.strip("/")) or "b0"
         fp = (
@@ -387,94 +406,13 @@ def append_bm25_postings(
             .collect()[0]
         )
         batch_id = f"{slug}-n{int(fp['n'])}-m{fp['m'] if fp['m'] is not None else 'x'}"
-    stats_root = f"{path}/stats"
-    ptr = current_pointer(stats_root)
-    applied = list(ptr.get("applied_batches", [])) if ptr else []
-    # Two distinct ledgers (the compaction lesson, ADVICE r9 #4):
-    # ``applied_batches`` is the APPEND-ONLY idempotency ledger — it
-    # survives compaction, so a late retry of a batch whose rows were
-    # already folded into a compacted root stays a no-op instead of
-    # duplicating them — while ``live_batches`` lists the batch roots a
-    # reader must still union (compaction resets it to []).  Pointers
-    # written before the split carry only applied_batches; fall back to
-    # it for reads.
-    live = list(ptr.get("live_batches", applied)) if ptr else []
-    if batch_id in applied:
-        # Retry after full success: postings renamed AND stats
-        # published — everything is already visible, nothing to redo.
-        return
-    from newspapers_etl_spark.operators.ivf_maintenance import (
-        _live_ops_log,
-        _root_epoch,
-    )
 
-    epoch = _root_epoch(ptr)
-    ops_log = _live_ops_log(ptr, epoch)
+    def staged() -> DataFrame:
+        if docs is not None:
+            return _staged_of(docs)
+        return _staged_tokens(spark, sf_dir)
 
-    staged = (
-        _staged_of(docs) if docs is not None else _staged_tokens(spark, sf_dir)
-    )
-    staging = f"{path}/_postings-batch-{batch_id}"
-
-    def _stage_postings() -> bool:
-        batch_postings = _postings_of(staged, shards)
-        batch_postings.repartition(
-            _shard_write_width(batch_postings, shards), "term_shard"
-        ).write.mode("overwrite").partitionBy("term_shard").parquet(staging)
-        # Atomic exposure + empty-batch guard via the shared helper
-        # (sinks/verified.expose_staged_batch): readers derive roots
-        # from the POINTER and Spark's listing skips underscore paths,
-        # so the staged batch is invisible until the rename; a final
-        # dir from a prior crashed-after-rename attempt is replaced
-        # wholesale; an EMPTY batch writes no data files and a fileless
-        # root breaks readers (UNABLE_TO_INFER_SCHEMA) — it is ledgered
-        # as applied (the retry no-op contract) but kept out of the
-        # live read roots.
-        return expose_staged_batch(
-            path, f"_postings-batch-{batch_id}", f"postings-batch-{batch_id}"
-        )
-
-    # The previous stats generation is ONE (n, sum_dl) row — read it
-    # back driver-locally (functions/tinyio.py) instead of a 1-row
-    # Spark job; the batch aggregation is the only distributed stats
-    # work and overlaps the postings staging (§2.6).
-    old = _read_bm25_stats(stats_root)
-    exposed, batch = par_jobs(
-        _stage_postings,
-        lambda: _corpus_stats(staged).collect()[0],
-    )
-    live_after = live + [batch_id] if exposed else live
-
-    new_n = float(old["n"]) + float(batch["n"])
-    new_sum_dl = float(old["sum_dl"] or 0.0) + float(batch["sum_dl"] or 0.0)
-    # GENERATION-POINTER publish (sinks/verified.py — the same publish
-    # its compaction uses): the merged stats land fully in a fresh
-    # ``_gen-N`` dir (invisible to readers — Hadoop listing skips
-    # underscore paths) via one driver-local write, then the
-    # ``_CURRENT`` pointer is atomically replaced, carrying the
-    # applied-batch ledger that makes this whole function idempotent.
-    # Readers through ``read_current`` see old stats or new stats at
-    # every instant (ADVICE r7 #1/VERDICT r7 #6).
-    gen_no, new_name = allocate_generation(stats_root)
-    _write_bm25_stats(f"{stats_root}/{new_name}", new_n, new_sum_dl)
-    publish_generation(
-        stats_root,
-        gen_no,
-        new_name,
-        meta={
-            "applied_batches": applied + [batch_id],
-            "live_batches": live_after,
-            # Append-ordered op journal for point-in-time reads
-            # (operators/index_pit.py): the BM25 entries also carry the
-            # published (n, sum_dl) pair — two scalars — because past
-            # stats GENERATIONS are reaped but as-of scoring needs them
-            # (the IVF journal skips this: codes reads need no stats).
-            "ops_log": ops_log + [
-                {"g": gen_no, "op": "add", "b": batch_id, "r": exposed,
-                 "ep": epoch, "n": new_n, "sum_dl": new_sum_dl}
-            ],
-        },
-    )
+    _apply_bm25_batch(path, "add", batch_id, staged, shards)
 
 
 def delete_bm25_docs(
@@ -499,101 +437,17 @@ def delete_bm25_docs(
     on doc_id; per-term document frequencies need no bookkeeping
     because df is derived from the surviving postings at query time.
 
-    Pointer protocol mirrors the append exactly: ``applied_deletes`` is
-    the append-only idempotency ledger (survives compaction — a late
-    retry of a folded delete must no-op), ``live_tombstones`` lists the
-    roots readers still anti-join (compaction folds them in and resets
-    it), and tombstones + subtracted stats become visible atomically
-    together through the one generation publish.  The caller owns
-    membership (deleting an unindexed doc_id, or the same id through
-    two batch_ids, corrupts the subtraction — the append's
-    doc-disjointness contract, in reverse).  SINGLE WRITER ASSUMED."""
-    from newspapers_etl_spark.sinks.verified import (
-        allocate_generation,
-        current_pointer,
-        expose_staged_batch,
-        publish_generation,
-    )
-
-    stats_root = f"{path}/stats"
-    ptr = current_pointer(stats_root)
-    applied_del = list(ptr.get("applied_deletes", [])) if ptr else []
-    tombs = list(ptr.get("live_tombstones", [])) if ptr else []
-    covers = dict(ptr.get("tombstone_covers", {})) if ptr else {}
-    if batch_id in applied_del:
-        return
-    from newspapers_etl_spark.operators.ivf_maintenance import (
-        _live_ops_log,
-        _root_epoch,
-    )
-
-    epoch = _root_epoch(ptr)
-    ops_log = _live_ops_log(ptr, epoch)
-
-    staged = _staged_of(docs)
-    if ptr is not None and not staged.head(1):
-        # Empty batch: nothing to subtract and nothing to tombstone —
-        # ledger the batch_id with a pointer-meta-only write instead of
-        # allocating a byte-identical stats generation (ADVICE r11).
-        # The unshuffled staging write emits schema-bearing part files
-        # even for zero rows, so expose_staged_batch cannot signal
-        # emptiness here.  A legacy pointer-less root falls through to
-        # the full path, whose publish establishes the pointer.
-        from newspapers_etl_spark.sinks.verified import update_pointer_meta
-
-        update_pointer_meta(
-            stats_root,
-            applied_deletes=applied_del + [batch_id],
-            ops_log=ops_log + [
-                {"g": int(ptr["generation"]), "op": "del", "b": batch_id,
-                 "r": False, "ep": epoch, "n": None, "sum_dl": None}
-            ],
-        )
-        return
-    staging = f"{path}/_tombs-batch-{batch_id}"
-
-    def _stage_tombs() -> bool:
-        staged.select("doc_id").write.mode("overwrite").parquet(staging)
-        return expose_staged_batch(
-            path, f"_tombs-batch-{batch_id}", f"tombs-batch-{batch_id}"
-        )
-
-    # The previous stats are one locally-read row; the batch's
-    # re-tokenized stats aggregation overlaps the tombstone staging
-    # (§2.6) — the only two jobs left in the publish.
-    old = _read_bm25_stats(stats_root)
-    exposed, gone = par_jobs(
-        _stage_tombs,
-        lambda: _corpus_stats(staged).collect()[0],
-    )
-    if exposed:
-        tombs_after = tombs + [batch_id]
-        # ROOT-SCOPED: this tombstone suppresses only the roots that
-        # exist NOW — a later append of the same doc lands in a new
-        # root it does not cover, so a takedown reversal is one
-        # ordinary append (sinks/verified.tombstoned_union).
-        covers[batch_id] = _live_posting_roots(ptr)
-    else:
-        tombs_after = tombs
-
-    new_n = float(old["n"]) - float(gone["n"])
-    new_sum_dl = float(old["sum_dl"] or 0.0) - float(gone["sum_dl"] or 0.0)
-    gen_no, new_name = allocate_generation(stats_root)
-    _write_bm25_stats(f"{stats_root}/{new_name}", new_n, new_sum_dl)
-    publish_generation(
-        stats_root,
-        gen_no,
-        new_name,
-        meta={
-            "applied_deletes": applied_del + [batch_id],
-            "live_tombstones": tombs_after,
-            "tombstone_covers": covers,
-            "ops_log": ops_log + [
-                {"g": gen_no, "op": "del", "b": batch_id, "r": exposed,
-                 "ep": epoch, "n": new_n, "sum_dl": new_sum_dl}
-            ],
-        },
-    )
+    The ledgered-batch protocol (functions/ledger.py), delete side:
+    ``applied_deletes`` is the append-only idempotency ledger (survives
+    compaction — a late retry of a folded delete must no-op),
+    ``live_tombstones`` lists the roots readers still anti-join
+    (compaction folds them in and resets it), and tombstones +
+    subtracted stats become visible atomically together through the one
+    generation publish.  The caller owns membership (deleting an
+    unindexed doc_id, or the same id through two batch_ids, corrupts
+    the subtraction — the append's doc-disjointness contract, in
+    reverse).  SINGLE WRITER ASSUMED."""
+    _apply_bm25_batch(path, "del", batch_id, lambda: _staged_of(docs))
 
 
 def upsert_bm25_docs(
@@ -605,10 +459,9 @@ def upsert_bm25_docs(
 ) -> None:
     """Re-index documents in place — a document EDIT at 100 TB is a
     delete of the stored tokenization plus an append of the new one,
-    composed under ONE batch discipline (the IVF twin is
-    ivf_maintenance.upsert_ivf_index; the two compose identically
-    because both indexes share the tombstone + applied-ledger
-    protocol):
+    composed under ONE batch discipline (``upsert_ivf_index`` composes
+    identically: both indexes publish through the tombstone +
+    applied-ledger protocol of functions/ledger.py):
 
     - DELETE ``docs_old`` (the currently-indexed text for the ids — the
       system of record has it) under ``<batch_id>.del``;
@@ -630,18 +483,6 @@ def upsert_bm25_docs(
     )
 
 
-def _live_posting_roots(ptr: dict | None) -> list[str]:
-    """The posting root NAMES (relative to the table root) a reader
-    unions right now — the base root plus every live batch root."""
-    base = ptr.get("postings_root", "postings") if ptr else "postings"
-    batches = (
-        list(ptr.get("live_batches", ptr.get("applied_batches", [])))
-        if ptr
-        else []
-    )
-    return [base] + [f"postings-batch-{b}" for b in batches]
-
-
 def compact_bm25_postings(
     spark: SparkSession,
     path: str,
@@ -654,13 +495,13 @@ def compact_bm25_postings(
     (ADVICE r9 #4 asked for exactly this before the reader comment
     could claim it).
 
-    Protocol (the shared helpers in sinks/verified.py — the IVF codes
-    compaction runs the identical sequence): rewrite the union into the
-    underscore-invisible staging dir ``_postings-compact-<n>`` (one
-    file per shard, the write_bm25_postings layout), rename atomically,
-    then ONE pointer metadata write flips readers — ``postings_root``
-    to the new dir, ``live_batches`` to [], and the superseded roots
-    recorded as ``reap_roots`` in the SAME write — while
+    The shared compaction of functions/ledger.py: rewrite the union
+    minus the live tombstones into the underscore-invisible staging
+    dir ``_postings-compact-<n>`` (one file per shard, the
+    write_bm25_postings layout), rename atomically, then ONE pointer
+    metadata write flips readers — ``postings_root`` to the new dir,
+    ``live_batches``/``live_tombstones`` reset, and the superseded
+    roots recorded as ``reap_roots`` in the SAME write — while
     ``applied_batches`` is deliberately UNTOUCHED: it is the
     idempotency ledger, and forgetting a folded batch would let a late
     retry re-append rows the compacted root already holds.  The old
@@ -674,100 +515,29 @@ def compact_bm25_postings(
 
     SINGLE WRITER ASSUMED, like every pointer maintenance step —
     serialize compactions with appends."""
-    import os
-    import shutil
-    from functools import reduce
-
     from newspapers_etl_spark.sinks.verified import (
         allocate_generation,
         current_pointer,
-        flip_compacted_roots,
-        local_fs_path,
         publish_generation,
-        reap_pending_roots,
     )
 
     stats_root = f"{path}/stats"
-    ptr = current_pointer(stats_root)
-    if ptr is None:
+    if current_pointer(stats_root) is None:
         # No append has ever published a pointer: republish the current
         # stats through a generation first so there is a pointer to
         # carry the root metadata (also upgrades a legacy root layout).
         # One row in, one row out — driver-local I/O (tinyio), no jobs.
         row = _read_bm25_stats(stats_root)
         gen_no, new_name = allocate_generation(stats_root)
-        _write_bm25_stats(f"{stats_root}/{new_name}", row["n"], row["sum_dl"])
+        _write_bm25_stats(f"{stats_root}/{new_name}", row)
         publish_generation(stats_root, gen_no, new_name)
-        ptr = current_pointer(stats_root)
-    reap_pending_roots(stats_root, path)  # heal a crashed prior reap
-    from newspapers_etl_spark.sinks.verified import reap_orphan_tombstones
-
-    reap_orphan_tombstones(path)  # heal a delete that died pre-publish
-    base = ptr.get("postings_root", "postings")
-    live = list(ptr.get("live_batches", ptr.get("applied_batches", [])))
-    old_roots = [f"{path}/{base}"] + [
-        f"{path}/postings-batch-{b}" for b in live
-    ]
-    n = int(ptr.get("compactions", 0)) + 1
-    new_root = f"postings-compact-{n:04d}"
-    # Fold the live tombstones into the compacted root (deleted docs'
-    # postings finally leave disk, via the same root-scoped reader
-    # queries use); the ledger reset rides the SAME atomic pointer
-    # flip.  ``applied_deletes`` survives, like ``applied_batches`` —
-    # a late retry of a folded delete must no-op.
-    from newspapers_etl_spark.sinks.verified import tombstoned_union
-
-    tomb_roots = [
-        f"{path}/tombs-batch-{b}"
-        for b in list(ptr.get("live_tombstones", []))
-    ]
-    union = tombstoned_union(
-        spark, path, ptr,
-        [base] + [f"postings-batch-{b}" for b in live], "doc_id",
-    )
-    union.repartition(
-        _shard_write_width(union, shards), "term_shard"
-    ).write.mode("overwrite").partitionBy("term_shard").parquet(
-        f"{path}/_{new_root}"
-    )
-    from newspapers_etl_spark.sinks.verified import has_parquet_data
-
-    if not has_parquet_data(f"{path}/_{new_root}"):
-        # Every posting deleted: keep the root readable as zero rows
-        # (a fileless partitioned root breaks readers).
-        spark.createDataFrame(
-            [],
-            "doc_id bigint, term string, tf double, dl double, "
-            "term_shard int",
-        ).write.mode("overwrite").parquet(f"{path}/_{new_root}")
-    os_path = local_fs_path(path)
-    final_dir = os.path.join(os_path, new_root)
-    shutil.rmtree(final_dir, ignore_errors=True)
-    os.rename(os.path.join(os_path, f"_{new_root}"), final_dir)
-    extra: dict = {"live_tombstones": [], "tombstone_covers": {}}
-    if keep_old_roots:
-        # Retention for PIT reads (operators/index_pit.py): the skipped
-        # reap leaves this epoch's roots on disk; the snapshot of its
-        # base + tombstone scopes rides the SAME atomic flip.
-        from newspapers_etl_spark.operators.ivf_maintenance import (
-            _retained_epoch_meta,
-            _root_epoch,
-        )
-
-        extra["retained_epochs"] = _retained_epoch_meta(
-            ptr, _root_epoch(ptr), base, "postings-batch-", live
-        )
-    flip_compacted_roots(
-        stats_root,
+    return compact(
+        spark,
         path,
-        root_key="postings_root",
-        new_root=new_root,
-        compactions=n,
-        old_roots=old_roots + tomb_roots,
-        keep_old_roots=keep_old_roots,
-        extra_meta=extra,
+        BM25,
+        lambda df, root: _write_postings(df, root, shards),
+        keep_old_roots,
     )
-    return new_root
 
 
 def _term_shards(
@@ -805,8 +575,6 @@ def retrieval_bm25_topk_from_postings(
     predicate; identical scores to the direct path by construction
     (same tf/dl/df inputs, same integer-scaled arithmetic),
     pytest-asserted along with the PartitionFilters pruning."""
-    from newspapers_etl_spark.sinks.verified import current_pointer
-
     wanted = _term_shards(spark, terms, shards)
     # The posting roots are the current base root plus every batch the
     # stats pointer's LIVE ledger records — the reader derives them from
@@ -819,20 +587,15 @@ def retrieval_bm25_topk_from_postings(
     # pushes into every branch (PartitionFilters per FileScan —
     # plan-asserted in pytest).  Pre-split pointers carry only
     # applied_batches; fall back to it.
-    ptr = current_pointer(f"{path}/stats")
     # Deleted documents are anti-joined per ROOT inside the shared
-    # tombstoned_union (each live tombstone scoped to the roots it
-    # covers, so a post-delete re-append is read untouched) and BEFORE
-    # df is derived, so document frequencies count only surviving docs
+    # reader (each live tombstone scoped to the roots it covers, so a
+    # post-delete re-append is read untouched) and BEFORE df is
+    # derived, so document frequencies count only surviving docs
     # (stats were already subtracted at delete time).  Costs nothing
     # until a delete lands; the term_shard/term predicates still push
     # into every branch scan through the union and the anti-join
     # (left-side columns — plan-asserted in pytest).
-    from newspapers_etl_spark.sinks.verified import tombstoned_union
-
-    postings = tombstoned_union(
-        spark, path, ptr, _live_posting_roots(ptr), "doc_id"
-    )
+    postings = read_live(spark, path, BM25)
     # avgdl derived from the stored combinable (n, sum_dl) pair — the
     # same division both the batch and incremental paths perform, so
     # scores agree bit-for-bit however the index was built.  The read

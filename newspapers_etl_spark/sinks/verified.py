@@ -307,14 +307,15 @@ def update_pointer_meta(path: str, **meta) -> None:
 
 
 def expose_staged_batch(table_root: str, staging_name: str, final_name: str) -> bool:
-    """Atomically expose a staged batch root (underscore dir → final
-    rename, replacing a prior crashed-after-rename attempt wholesale)
-    and report whether it holds any DATA — an EMPTY batch writes no
+    """Atomically expose a staged root (underscore dir → final rename,
+    replacing a prior crashed-after-rename attempt wholesale) and
+    report whether it holds any DATA — an EMPTY batch writes no
     parquet files, and a fileless root breaks readers with
     UNABLE_TO_INFER_SCHEMA, so it is removed and the caller keeps it
     out of the live read roots (it still enters the idempotency
-    ledger).  Shared by the BM25 posting append and the IVF code
-    append — the protocol lives once."""
+    ledger).  The exposure step of ``functions/ledger.apply_batch``
+    and ``functions/ledger.compact`` (whose root always holds data),
+    the one publish path both maintained indexes run."""
     import os
     import shutil
 
@@ -392,12 +393,12 @@ def flip_compacted_roots(
     keep_old_roots: bool = False,
     extra_meta: dict | None = None,
 ) -> None:
-    """The compaction publish, shared by the BM25 and IVF compactions:
-    ONE atomic pointer-metadata write flips readers to ``new_root``,
-    resets ``live_batches`` (``applied_batches`` survives untouched —
-    it is the idempotency ledger), and RECORDS the superseded roots as
-    ``reap_roots`` in the same write; only then are they deleted and
-    the list cleared.  A crash between flip and reap leaves the names
+    """The compaction publish of ``functions/ledger.compact``, which
+    both maintained indexes run: ONE atomic pointer-metadata write
+    flips readers to ``new_root``, resets ``live_batches``
+    (``applied_batches`` survives untouched — it is the idempotency
+    ledger), and RECORDS the superseded roots as ``reap_roots`` in the
+    same write; only then are they deleted and the list cleared.  A crash between flip and reap leaves the names
     in the pointer for ``reap_pending_roots`` to finish — the
     alternative (compute old roots on retry) reads the NEW pointer and
     would orphan a full index copy per crash.
@@ -525,8 +526,9 @@ def tombstoned_union(
     read untouched, so a takedown reversal is one ordinary append, no
     compaction required first.  A tombstone with no ``covers`` entry
     (a pre-scoping pointer) conservatively covers every root.  Costs
-    nothing until a delete lands; the shared reader for the BM25
-    postings and the IVF codes — the ledger protocol lives once."""
+    nothing until a delete lands; the reader under
+    ``functions/ledger.read_live`` for the BM25 postings and the IVF
+    codes alike."""
     from functools import reduce
 
     covers = dict(ptr.get("tombstone_covers", {})) if ptr else {}

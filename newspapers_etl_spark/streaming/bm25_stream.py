@@ -9,8 +9,7 @@ No reference counterpart (the reference neither streams nor indexes,
 src/01-scrape-images.py); this composes two already-verified halves:
 
 - Structured Streaming supplies ordering, offset tracking and restart
-  semantics (``maxFilesPerTrigger`` micro-batches, ``availableNow``,
-  ``checkpointLocation``);
+  semantics through the shared ``functions/ledger.drain``;
 - ``append_bm25_postings`` supplies atomic visibility and idempotency
   (staged rename + generation-pointer publish + applied-batch ledger),
   so a micro-batch REPLAYED after a crash-restart no-ops instead of
@@ -37,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
+from newspapers_etl_spark.functions.ledger import drain
 from newspapers_etl_spark.operators.ivf_maintenance import scratch_index_dir
 from newspapers_etl_spark.operators.retrieval import (
     BM25_ORACLE,
@@ -87,21 +87,8 @@ def stream_append_bm25(
             docs=batch_df,
         )
 
-    stream = (
-        spark.readStream.schema(
-            schema if schema is not None
-            else spark.read.parquet(updates_dir).schema
-        )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(updates_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, updates_dir, checkpoint_dir, apply_batch,
+          max_files_per_trigger, schema)
 
 
 @query("stbm25", oracle=BM25_ORACLE)

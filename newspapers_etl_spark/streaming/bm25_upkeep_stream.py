@@ -14,10 +14,12 @@
 
 No reference counterpart (the reference neither streams nor indexes,
 src/01-scrape-images.py); both compose two already-verified layers —
-Structured Streaming's offsets/restart semantics and the posting
-index's tombstone + applied-ledger protocol — so a replayed epoch
-no-ops its published half and applies the rest: exactly-once index
-mutation from an at-least-once stream, the stivf/stup story.
+Structured Streaming's offsets/restart semantics (the shared
+``functions/ledger.drain``) and the posting index's tombstone +
+applied-ledger protocol (``functions/ledger.apply_batch``) — so a
+replayed epoch no-ops its published half and applies the rest:
+exactly-once index mutation from an at-least-once stream, the
+stivf/stup story.
 
 Correctness is micro-batch-split invariance again: tombstone roots
 accumulate (readers anti-join their union), posting rows are a pure
@@ -50,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
+from newspapers_etl_spark.functions.ledger import drain
 from newspapers_etl_spark.operators.index_delete import (
     BM25_DEL_ORACLE,
     DOC_DEL_PRED,
@@ -67,25 +70,6 @@ from newspapers_etl_spark.operators.retrieval import (
 )
 from newspapers_etl_spark.functions.jobs import par_jobs
 from newspapers_etl_spark.registry import query
-
-
-def _drain(spark, source_dir, checkpoint_dir, apply_batch,
-           max_files_per_trigger, schema):
-    stream = (
-        spark.readStream.schema(
-            schema if schema is not None
-            else spark.read.parquet(source_dir).schema
-        )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def stream_delete_bm25(
@@ -115,8 +99,8 @@ def stream_delete_bm25(
             batch_df.sparkSession, retired, path, batch_id=f"e{epoch_id}"
         )
 
-    _drain(spark, retired_dir, checkpoint_dir, apply_batch,
-           max_files_per_trigger, schema)
+    drain(spark, retired_dir, checkpoint_dir, apply_batch,
+          max_files_per_trigger, schema)
 
 
 def stream_upsert_bm25(
@@ -146,8 +130,8 @@ def stream_upsert_bm25(
             batch_id=f"e{epoch_id}",
         )
 
-    _drain(spark, updates_dir, checkpoint_dir, apply_batch,
-           max_files_per_trigger, schema)
+    drain(spark, updates_dir, checkpoint_dir, apply_batch,
+          max_files_per_trigger, schema)
 
 
 @query("stbdl", oracle=BM25_DEL_ORACLE)

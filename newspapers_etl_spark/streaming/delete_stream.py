@@ -11,7 +11,7 @@ src/01-scrape-images.py persists everything it scrapes); this composes
 two already-verified layers:
 
 - Structured Streaming supplies ordering, offset tracking and restart
-  semantics (the stivf/st_bm25/stup pattern);
+  semantics through the shared ``functions/ledger.drain``;
 - ``delete_from_ivf_index`` supplies atomicity and idempotency
   (root-scoped ``tombs-batch-<id>`` roots + the ``applied_deletes``
   ledger + one generation-pointer publish), so a micro-batch REPLAYED
@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
+from newspapers_etl_spark.functions.ledger import drain
 from newspapers_etl_spark.operators.index_delete import (
     IVF_DEL_ORACLE,
     IVF_DEL_PRED,
@@ -95,21 +96,8 @@ def stream_delete_ivf(
             batch_df.sparkSession, retired, path, batch_id=f"e{epoch_id}"
         )
 
-    stream = (
-        spark.readStream.schema(
-            schema if schema is not None
-            else spark.read.parquet(retired_dir).schema
-        )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(retired_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, retired_dir, checkpoint_dir, apply_batch,
+          max_files_per_trigger, schema)
 
 
 @query("stdel", oracle=IVF_DEL_ORACLE)

@@ -8,8 +8,9 @@ No reference counterpart (the reference neither streams nor embeds,
 src/01-scrape-images.py); this composes two already-verified halves:
 
 - Structured Streaming supplies ordering, offset tracking and restart
-  semantics (``maxFilesPerTrigger`` micro-batches, ``availableNow``,
-  ``checkpointLocation`` — the scd_stream/incremental_stream pattern);
+  semantics through ``functions/ledger.drain`` (``maxFilesPerTrigger``
+  micro-batches, ``availableNow``, ``checkpointLocation``), the one
+  drain every foreachBatch stream here runs;
 - ``append_ivf_index`` supplies atomic visibility and idempotency
   (staged rename + generation-pointer publish + applied-batch ledger),
   so a micro-batch REPLAYED after a crash-restart no-ops instead of
@@ -34,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
+from newspapers_etl_spark.functions.ledger import drain
 from newspapers_etl_spark.operators.ivf_maintenance import (
     BASE_PREDICATE,
     FIT_PREDICATE,
@@ -68,18 +70,8 @@ def stream_append_ivf(
             batch_df.sparkSession, batch_df, path, batch_id=f"e{epoch_id}"
         )
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(updates_dir).schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(updates_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, updates_dir, checkpoint_dir, apply_batch,
+          max_files_per_trigger)
 
 
 @query("stivf", oracle=IVF_APP_ORACLE)

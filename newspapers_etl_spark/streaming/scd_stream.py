@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
+from newspapers_etl_spark.functions.ledger import drain
 from newspapers_etl_spark.functions.scd import (
     _BASE_TS,
     _UPD_TS,
@@ -146,18 +147,7 @@ def stream_scd2_upsert(
         state["batches"] += 1
 
     ckpt = str(root / "_checkpoint")
-    stream = (
-        spark.readStream.schema(spark.read.parquet(updates_dir).schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(updates_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, updates_dir, ckpt, apply_batch, max_files_per_trigger)
     final = spark.read.parquet(gen_dir(current_generation(root)))
     if owns_root:
         # A throwaway root would otherwise leak N+1 full history copies

@@ -11,7 +11,7 @@ No reference counterpart (the reference neither streams nor embeds,
 src/01-scrape-images.py); this composes two already-verified layers:
 
 - Structured Streaming supplies ordering, offset tracking and restart
-  semantics (the stivf/st_bm25 pattern);
+  semantics through the shared ``functions/ledger.drain``;
 - ``upsert_ivf_index`` supplies atomicity and idempotency PER HALF
   (root-scoped tombstone delete + ledgered append under
   ``e<epoch>.del`` / ``e<epoch>.add``), so a replayed epoch no-ops its
@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
+from newspapers_etl_spark.functions.ledger import drain
 from newspapers_etl_spark.operators.index_upsert import (
     IVF_UP_ORACLE,
     IVF_UP_PRED,
@@ -94,21 +95,8 @@ def stream_upsert_ivf(
             batch_id=f"e{epoch_id}",
         )
 
-    stream = (
-        spark.readStream.schema(
-            schema if schema is not None
-            else spark.read.parquet(updates_dir).schema
-        )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(updates_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, updates_dir, checkpoint_dir, apply_batch,
+          max_files_per_trigger, schema)
 
 
 @query("stup", oracle=IVF_UP_ORACLE)

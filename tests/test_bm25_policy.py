@@ -161,8 +161,8 @@ def test_fully_tombstoned_index_alerts_and_compacts(spark, sf_dir, tmp_path):
     compaction actually removes them — pointer flipped to a compacted
     root holding zero rows, tombstone ledger reset."""
     from newspapers_etl_spark.operators.bm25_policy import bm25_policy_chain
+    from newspapers_etl_spark.functions.ledger import BM25, live_roots
     from newspapers_etl_spark.operators.retrieval import (
-        _live_posting_roots,
         delete_bm25_docs,
         write_bm25_postings,
     )
@@ -193,7 +193,7 @@ def test_fully_tombstoned_index_alerts_and_compacts(spark, sf_dir, tmp_path):
     assert ptr["live_tombstones"] == []
     assert (
         tombstoned_union(
-            spark, path, ptr, _live_posting_roots(ptr), "doc_id"
+            spark, path, ptr, live_roots(BM25, ptr), "doc_id"
         ).count()
         == 0
     )

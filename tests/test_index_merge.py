@@ -174,7 +174,7 @@ def _posting_rows(df):
 
 
 def _read_postings(spark, path):
-    from newspapers_etl_spark.operators.retrieval import _live_posting_roots
+    from newspapers_etl_spark.functions.ledger import BM25, live_roots
     from newspapers_etl_spark.sinks.verified import (
         current_pointer,
         tombstoned_union,
@@ -182,7 +182,7 @@ def _read_postings(spark, path):
 
     ptr = current_pointer(f"{path}/stats")
     return tombstoned_union(
-        spark, path, ptr, _live_posting_roots(ptr), "doc_id"
+        spark, path, ptr, live_roots(BM25, ptr), "doc_id"
     )
 
 

@@ -124,10 +124,8 @@ def test_history_boundary_refuses_folded_views(spark, sf_dir, tmp_path):
     # compaction), not O(ops ever).  The trimmed batch still refuses —
     # as an unknown journal entry now.
     from newspapers_etl_spark.operators.index_pit import PIT_DEL_PRED
-    from newspapers_etl_spark.operators.ivf_maintenance import (
-        _root_epoch,
-        append_ivf_index,
-    )
+    from newspapers_etl_spark.functions.ledger import root_epoch
+    from newspapers_etl_spark.operators.ivf_maintenance import append_ivf_index
     from newspapers_etl_spark.sinks.verified import current_pointer
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -136,7 +134,7 @@ def test_history_boundary_refuses_folded_views(spark, sf_dir, tmp_path):
     )
     append_ivf_index(spark, fresh, path, batch_id="b3")
     ptr = current_pointer(f"{path}/stats")
-    epoch = _root_epoch(ptr)
+    epoch = root_epoch(ptr)
     assert [o["b"] for o in ptr["ops_log"]] == ["b3"]
     assert all(o["ep"] == epoch for o in ptr["ops_log"])
     with pytest.raises(ValueError, match="no op journal entry"):

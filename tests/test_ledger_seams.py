@@ -1,9 +1,9 @@
 """Crash seams of the single ledgered publish path, for both index
 kinds and both batch ops.
 
-Each case builds a small index (base build plus one append ``b0``, so
-a pointer exists), injects a crash at one pointer seam of an add or a
-delete, and checks two things:
+Each case starts from a copy of one small index per kind (base build
+plus one append ``b0``, so a pointer exists), injects a crash at one
+pointer seam of an add or a delete, and checks two things:
 
 - after the crash, readers see exactly the pre-op index: the same
   codes (IVF) or the same top-k (BM25), and the same pointer;
@@ -14,6 +14,7 @@ delete, and checks two things:
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -93,7 +94,23 @@ def _pointer(path):
         return f.read()
 
 
-_REFERENCE: dict = {}
+@pytest.fixture(scope="module")
+def built():
+    """Per-module memo: the kinds' helpers (the IVF models are fitted
+    once), their set-up indexes and the uncrashed reference results."""
+    return {}
+
+
+def _fresh_index(tmp_path_factory, built, kind, setup, name):
+    """A private copy of the kind's set-up index: every case mutates
+    its own copy of one build instead of building again.  The index
+    holds only relative root names, so a copy is the same index."""
+    if ("setup", kind) not in built:
+        built["setup", kind] = str(tmp_path_factory.mktemp(kind) / "idx")
+        setup(built["setup", kind])
+    path = str(tmp_path_factory.mktemp(name) / "idx")
+    shutil.copytree(built["setup", kind], path)
+    return path
 
 
 @pytest.mark.heavy
@@ -101,20 +118,22 @@ _REFERENCE: dict = {}
 @pytest.mark.parametrize("op", ["add", "del"])
 @pytest.mark.parametrize("kind", ["ivf", "bm25"])
 def test_crash_at_seam_is_invisible_and_retry_converges(
-    spark, sf_dir, tmp_path_factory, monkeypatch, kind, op, seam
+    spark, sf_dir, tmp_path_factory, monkeypatch, built, kind, op, seam
 ):
     from newspapers_etl_spark.sinks import verified
 
-    setup, ops, read = {"ivf": _ivf, "bm25": _bm25}[kind](spark, sf_dir)
-    if (kind, op) not in _REFERENCE:
-        ref = str(tmp_path_factory.mktemp(f"ref-{kind}-{op}") / "idx")
-        setup(ref)
+    if ("kit", kind) not in built:
+        built["kit", kind] = {"ivf": _ivf, "bm25": _bm25}[kind](spark, sf_dir)
+    setup, ops, read = built["kit", kind]
+    if ("ref", kind, op) not in built:
+        ref = _fresh_index(tmp_path_factory, built, kind, setup, f"ref-{op}")
         ops[op](ref)
-        _REFERENCE[kind, op] = (read(ref), _pointer(ref))
-    want_rows, want_ptr = _REFERENCE[kind, op]
+        built["ref", kind, op] = (read(ref), _pointer(ref))
+    want_rows, want_ptr = built["ref", kind, op]
 
-    path = str(tmp_path_factory.mktemp(f"crash-{kind}-{op}-{seam}") / "idx")
-    setup(path)
+    path = _fresh_index(
+        tmp_path_factory, built, kind, setup, f"crash-{kind}-{op}-{seam}"
+    )
     before_rows, before_ptr = read(path), _pointer(path)
     assert before_rows != want_rows  # the op is visible when it lands
 

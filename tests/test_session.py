@@ -1,9 +1,10 @@
-"""Session-level behaviour of ``get_spark``: each generated-code shape is
-compiled once per session, and driver threads started by ``par_jobs``
-inherit the caller's job tags."""
+"""Session-level behaviour of ``get_spark``: the driver heap fits in the
+host's RAM, each generated-code shape is compiled once per session, and
+driver threads started by ``par_jobs`` inherit the caller's job tags."""
 
 from __future__ import annotations
 
+import os
 import warnings
 
 from newspapers_etl_spark.functions.jobs import par_jobs
@@ -26,6 +27,14 @@ def _collect_all(spark, sf_dir) -> None:
     for name in _WORKING_SET:
         queries[name](spark, sf_dir).collect()
         spark.catalog.clearCache()
+
+
+def test_driver_heap_fits_in_physical_ram(spark):
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext.getConf().get("spark.driver.memory")
+    assert jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf) <= ram
+    assert jvm.java.lang.Runtime.getRuntime().maxMemory() <= ram
 
 
 def test_codegen_cache_cap_is_pinned(spark):
