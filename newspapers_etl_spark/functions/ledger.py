@@ -260,23 +260,18 @@ def apply_batch(
         exposed, contrib = par_jobs(stage, lambda: batch_stats(df))
         folded = fold(old_rows, contrib, 1 if add else -1)
         write_stats(f"{stats_root}/{gen_name}", folded)
+        meta: dict = {ledger: applied + [batch_id]}
         if add:
             live = live_batches(ptr)
-            meta = {
-                "applied_batches": applied + [batch_id],
-                "live_batches": live + [batch_id] if exposed else live,
-            }
+            meta["live_batches"] = live + [batch_id] if exposed else live
         else:
             tombs = list((ptr or {}).get("live_tombstones", []))
             covers = dict((ptr or {}).get("tombstone_covers", {}))
             if exposed:
                 tombs.append(batch_id)
                 covers[batch_id] = live_roots(kind, ptr)
-            meta = {
-                "applied_deletes": applied + [batch_id],
-                "live_tombstones": tombs,
-                "tombstone_covers": covers,
-            }
+            meta["live_tombstones"] = tombs
+            meta["tombstone_covers"] = covers
         # Append-ordered op journal for point-in-time reads: generation,
         # op, batch, whether a root was exposed, root-rewrite epoch.
         meta["ops_log"] = ops_log + [
