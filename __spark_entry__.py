@@ -29,14 +29,7 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (SURVEY.md §7.2) on sf0.001; driver checks rows>0.
-
-    Resolved through the registry, NOT by importing the operator module
-    directly: a direct import would register relational's 21 queries at
-    whatever moment entry() first runs — if the harness smoke-checks
-    entry() BEFORE calling queries(), that splices the whole block to
-    the front of the registration order and silently shifts the ~50-
-    query correctness window.  all_queries() always realizes the
-    declared _OPERATOR_MODULES order."""
+    Resolved through the registry, like every other query."""
     return registry.all_queries()["flags"](spark, SMOKE_SF_DIR)
 
 

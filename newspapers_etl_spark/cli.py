@@ -99,7 +99,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "explain":
-        from newspapers_etl_spark import plans
+        from newspapers_etl_spark import plans  # deferred: CLI start-up
 
         queries = registry.all_queries()
         if args.name not in queries:
@@ -117,7 +117,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "lint":
-        from newspapers_etl_spark import plans
+        from newspapers_etl_spark import plans  # deferred: CLI start-up
 
         queries = registry.all_queries()
         if args.name is not None and args.name not in queries:
@@ -137,6 +137,7 @@ def main(argv: list[str] | None = None) -> int:
         return 1 if violations else 0
 
     # command == "run": date-ranged events batch through one operation.
+    # Imports deferred, like the ones above, to keep CLI start-up fast.
     from newspapers_etl_spark.catalog import load_table
     from newspapers_etl_spark.operators.incremental import run_operation
 

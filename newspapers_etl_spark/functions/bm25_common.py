@@ -1,17 +1,7 @@
-"""BM25 scoring constants shared by ``operators.retrieval``,
-``operators.retrieval_fusion`` and ``operators.retrieval_eval``.
-
-They live here — in a module that registers nothing — because the
-operator modules need them at IMPORT time (oracle f-strings, the
-registered batch-query dict), and a top-level import between two
-query-registering modules splices the imported module's block into the
-importer's registry slot (the driver window is positional; see
-registry._OPERATOR_MODULES and
-test_registry_registration_order_is_contiguous).  The batch constants
-moved here in r10 precisely for that reason: retrieval_eval leads the
-r10 window while retrieval_fusion sits in the tail, so the old
-eval→fusion top-level import would have spliced bm25b/rrf into the
-window front.
+"""BM25 scoring constants and the single-probe oracle SQL shared by
+``operators.retrieval``, ``operators.retrieval_fusion``,
+``operators.retrieval_eval``, ``operators.index_pit`` and
+``operators.index_merge``.
 """
 
 from __future__ import annotations
@@ -23,10 +13,6 @@ BM25_TOP_K = 50
 # the Spark plan and the DuckDB oracle score the identical term set.
 BM25_QUERY_TERMS = ("join", "vector", "stream", "window")
 
-# The single-probe oracle builder lives here (not retrieval.py) for the
-# same no-registration reason: index_merge's bmmrg needs the replay SQL
-# at IMPORT time, and a top-level index_merge -> retrieval import would
-# splice bm25's registration into index_merge's registry slot.
 _TERMS_SQL = "', '".join(BM25_QUERY_TERMS)
 
 

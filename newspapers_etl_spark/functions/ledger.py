@@ -34,10 +34,8 @@ callables its own module passes in: encode or tokenize, the root
 writer, the stats aggregate and fold.  SINGLE WRITER ASSUMED, like
 every generation-pointer publisher.
 
-This module registers no queries.  It reaches ``sinks.verified``
-(which does) only inside functions and through the module object, so
-importing it never moves a registration, and tests that monkeypatch a
-``verified`` function reach every call made here.
+Every ``sinks.verified`` call goes through the module object, so tests
+that monkeypatch a ``verified`` function reach every call made here.
 """
 
 from __future__ import annotations
@@ -46,6 +44,8 @@ from dataclasses import dataclass
 from typing import Any, Callable
 
 from newspapers_etl_spark.functions.jobs import par_jobs
+from newspapers_etl_spark.functions.tinyio import read_tiny_rows
+from newspapers_etl_spark.sinks import verified
 
 TOMBS = "tombs-batch-"
 
@@ -163,8 +163,6 @@ def read_live(spark, path: str, kind: IndexKind):
     POINTER, never a directory listing, so a batch's rows and stats
     appear atomically together and a compaction's one metadata write
     flips readers to the folded root."""
-    from newspapers_etl_spark.sinks import verified
-
     ptr = verified.current_pointer(f"{path}/stats")
     return verified.tombstoned_union(
         spark, path, ptr, live_roots(kind, ptr), kind.id_col
@@ -177,8 +175,6 @@ def write_root_or_empty(
     """``write_root(df, root)``, then a typed zero-row file if that left
     no data: a partitioned write of an empty relation leaves a fileless
     root, which readers reject (UNABLE_TO_INFER_SCHEMA)."""
-    from newspapers_etl_spark.sinks import verified
-
     write_root(df, root)
     if not verified.has_parquet_data(root):
         df.sparkSession.createDataFrame([], kind.empty_schema).write.mode(
@@ -211,9 +207,6 @@ def apply_batch(
       generation's rows on the driver (``sign`` -1 subtracts a delete);
     - ``write_stats(dir, folded)`` writes the new generation; the
       ``kind.journal_keys`` of ``folded`` go into the journal entry."""
-    from newspapers_etl_spark.functions.tinyio import read_tiny_rows
-    from newspapers_etl_spark.sinks import verified
-
     add = op == "add"
     stats_root = f"{path}/stats"
     ptr = verified.current_pointer(stats_root)
@@ -303,8 +296,6 @@ def compact(
     needs to keep serving the closed epoch.  Stats move nowhere
     (compaction adds and removes no rows).  Returns the new root's
     name."""
-    from newspapers_etl_spark.sinks import verified
-
     stats_root = f"{path}/stats"
     ptr = verified.current_pointer(stats_root)
     # Heal a crashed prior reap and a delete that died before publish.

@@ -1,13 +1,8 @@
 """Pure SCD2 primitives shared across operator modules.
 
-Lives under ``functions/`` (no ``@query`` registrations) so that
-``operators/scd.py`` and ``streaming/scd_stream.py`` can both compose
-the merge WITHOUT importing each other at registration time — a
-cross-module operator import splices the imported module's queries into
-the importer's slot in the registry order, silently shifting the
-driver's ~50-query correctness window (the same reasoning as
-``functions/text.py::lang_score_sql``).  Design rationale and the
-100 TB argument live in ``operators/scd.py``'s module docstring.
+``operators/scd.py`` and ``streaming/scd_stream.py`` both compose the
+merge.  Design rationale and the 100 TB argument live in
+``operators/scd.py``'s module docstring.
 """
 
 from __future__ import annotations

@@ -93,11 +93,8 @@ def doc_fingerprint(col: Column | str) -> Column:
 
 def lang_score_sql(lang: str) -> str:
     """DuckDB marker-hit-count expression for one language — the oracle
-    twin of ``lang_marker_hits``.  Lives here (not in an operator
-    module) so queries in DIFFERENT operator modules can compose it
-    without importing each other at registration time, which would
-    splice query-registration order (guarded by
-    tests/test_sql_entrypoint.py::test_registry_registration_order_is_contiguous_per_module)."""
+    twin of ``lang_marker_hits``, shared by queries in different
+    operator modules."""
     markers = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
     return (
         "CAST(len(list_filter(string_split_regex(text, '\\s+'), "

@@ -42,11 +42,11 @@ import os
 import uuid
 from typing import Any, Iterable, Mapping, Sequence
 
+from newspapers_etl_spark.sinks import verified
+
 
 def _fs_path(path: str) -> str:
-    from newspapers_etl_spark.sinks.verified import local_fs_path
-
-    return local_fs_path(path)
+    return verified.local_fs_path(path)
 
 
 def write_tiny_parquet(

@@ -25,13 +25,6 @@ Scale design:
   (nprobe, cells, codebooks) against a SAMPLED probe set — recall on a
   probe sample is the standard tuning feedback for the `annst` /
   `sh_bkts` occupancy knobs (SCALING.md).
-
-Declared at the registry TAIL (post-window, the drift/ndcg precedent):
-NEW in r10, sweep-green and pytest-covered this round, leads the r11
-window with ivf_app/drift_emb.  Top-level similarity import is safe
-here: similarity is declared earlier in _OPERATOR_MODULES, so it is
-already imported when this module registers (the scd-before-scd_stream
-rule; pinned by test_registry_registration_order_is_contiguous).
 """
 
 from __future__ import annotations

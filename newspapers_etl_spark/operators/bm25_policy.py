@@ -44,19 +44,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
-from newspapers_etl_spark.operators.index_delete import DOC_DEL_PRED
 from newspapers_etl_spark.functions.ledger import (
     BM25,
     TOMBS,
     live_roots,
     read_live,
 )
+from newspapers_etl_spark.operators.index_delete import DOC_DEL_PRED
+from newspapers_etl_spark.operators.ivf_maintenance import scratch_index_dir
 from newspapers_etl_spark.operators.retrieval import (
+    _read_bm25_stats,
     compact_bm25_postings,
     delete_bm25_docs,
     write_bm25_postings,
 )
 from newspapers_etl_spark.registry import query
+from newspapers_etl_spark.sinks import verified
 
 # Alert when tombstoned docs exceed a tenth of the live corpus; compact
 # when the dead-posting share a reader pays for exceeds a twentieth.
@@ -149,11 +152,6 @@ def bm25_policy_chain(
     disk.  A pointer-less but populated index (the plain
     write_bm25_postings layout, no maintenance yet) monitors normally
     with zero tombstones."""
-    from newspapers_etl_spark.sinks.verified import (
-        current_pointer,
-        has_parquet_data,
-    )
-
     nothing = [("frag", None, False), ("dead", None, False),
                ("compact", None, False)]
     schema = "stage string, metric double, act boolean"
@@ -162,12 +160,10 @@ def bm25_policy_chain(
     # POINTER-LESS but populated index is monitorable — no pointer
     # means no delete ever published, i.e. zero tombstones by
     # construction (the legacy write_bm25_postings layout).
-    if not has_parquet_data(stats_root):
+    if not verified.has_parquet_data(stats_root):
         return spark.createDataFrame(nothing, schema)
-    ptr = current_pointer(stats_root)
+    ptr = verified.current_pointer(stats_root)
     # 1-row driver-local stats read (functions/tinyio.py, guide §1.2).
-    from newspapers_etl_spark.operators.retrieval import _read_bm25_stats
-
     live_n = float(_read_bm25_stats(stats_root)["n"])
     tombs = list(ptr.get("live_tombstones", [])) if ptr else []
     if live_n <= 0 and not tombs:
@@ -208,7 +204,7 @@ def bm25_policy_chain(
         rows.append(("dead", None, False))
     if verdict:
         compact_bm25_postings(spark, path)
-        survived = _stored(spark, path, current_pointer(stats_root)).count()
+        survived = _stored(spark, path, verified.current_pointer(stats_root)).count()
         rows.append(("compact", float(survived), True))
     else:
         rows.append(("compact", None, False))
@@ -227,10 +223,6 @@ def bm25_policy_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs for the posting relation) and takes the same branch because
     every compare is the round-then-compare posture on exact
     integer-valued doubles."""
-    from newspapers_etl_spark.operators.ivf_maintenance import (
-        scratch_index_dir,
-    )
-
     path = scratch_index_dir("bm-pol", sf_dir)
     write_bm25_postings(spark, sf_dir, path)
     docs = load_table(spark, sf_dir, "documents")

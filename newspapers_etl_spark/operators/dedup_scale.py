@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from newspapers_etl_spark.operators.dedup import manku_neardup_pairs
 from newspapers_etl_spark.registry import query
 
 SIMHASH32_BITS = 32
@@ -48,11 +49,6 @@ def dedup_simhash32_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     Verification is ``F.bit_count`` on the XOR (one JVM popcount
     instruction); at 32+ bits the fixture's inlined literal-mask chain
     stops being free (codegen size grows linearly with width)."""
-    # Lazy import: operators.dedup registers 10 queries at import time;
-    # a top-level import here would splice its block into THIS module's
-    # registry slot (see test_registry_registration_order_is_contiguous).
-    from newspapers_etl_spark.operators.dedup import manku_neardup_pairs
-
     return manku_neardup_pairs(
         spark,
         sf_dir,

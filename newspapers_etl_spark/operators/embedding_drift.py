@@ -41,17 +41,18 @@ from newspapers_etl_spark.functions.lloyd_sql import (
     SQL_DOT,
     lloyd_centroid_ctes,
 )
+from newspapers_etl_spark.operators.similarity import (
+    IVF_CELLS,
+    IVF_ITERATIONS,
+    _centroids,
+    _nearest_cell,
+)
 from newspapers_etl_spark.registry import query
-
-# Literal copies of the quantizer constants (similarity registers
-# queries at import time; importing it here would splice its block into
-# this module's registry slot).  Pinned by tests/test_ivf_maintenance.py.
-_OC_CELLS, _OC_ITERS = 8, 2
 
 _ASG_DOT = SQL_DOT.format(a="n_.embedding", b="c.cvec")
 
 DRIFT_EMB_ORACLE = f"""
-WITH {lloyd_centroid_ctes(_OC_CELLS, _OC_ITERS)},
+WITH {lloyd_centroid_ctes(IVF_CELLS, IVF_ITERATIONS)},
 asg AS (
   SELECT vec_id, cell,
          CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END AS is_ref
@@ -59,7 +60,7 @@ asg AS (
     SELECT n_.vec_id, c.cell,
            row_number() OVER (PARTITION BY n_.vec_id
                               ORDER BY {_ASG_DOT} DESC, c.cell) AS rk
-    FROM nn n_ CROSS JOIN c{_OC_ITERS} c
+    FROM nn n_ CROSS JOIN c{IVF_ITERATIONS} c
   ) WHERE rk = 1
 ),
 counts AS (
@@ -94,8 +95,6 @@ def embedding_drift_over(
     monitor body: production passes the deployed index's centroids and
     a snapshot-id predicate; the registered query passes the exact
     fixture fit and the parity surrogate."""
-    from newspapers_etl_spark.operators.similarity import _nearest_cell
-
     counts = (
         e.filter(F.col("embedding").isNotNull())
         .select(
@@ -138,10 +137,8 @@ def embedding_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the embedding-drift score the monitor alerts on (>0.2 investigate,
     >0.25 block — the drift_monitor thresholds); per-cell terms keep it
     explainable (WHICH region of embedding space moved)."""
-    from newspapers_etl_spark.operators.similarity import _centroids
-
     e = load_table(spark, sf_dir, "embeddings")
-    cents = _centroids(e, _OC_CELLS, _OC_ITERS, fit_fraction=1.0)
+    cents = _centroids(e, IVF_CELLS, IVF_ITERATIONS, fit_fraction=1.0)
     if not cents:
         return spark.createDataFrame(
             [], "cell int, ref_n long, cand_n long, psi_part double"

@@ -37,9 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
-# bm25_common registers nothing — the safe import-time source for the
-# replay SQL (a top-level retrieval import here would splice bm25's
-# registration into this module's registry slot).
 from newspapers_etl_spark.functions.bm25_common import bm25_oracle_sql
 from newspapers_etl_spark.functions.jobs import par_jobs
 from newspapers_etl_spark.functions.ledger import (
@@ -48,6 +45,7 @@ from newspapers_etl_spark.functions.ledger import (
     read_live,
     write_root_or_empty,
 )
+from newspapers_etl_spark.functions.tinyio import read_tiny_rows, write_model
 from newspapers_etl_spark.operators.ivf_maintenance import (
     FIT_PREDICATE,
     IVF_FROZEN_CTES,
@@ -60,7 +58,15 @@ from newspapers_etl_spark.operators.ivf_maintenance import (
     read_ivf_codes,
     scratch_index_dir,
 )
+from newspapers_etl_spark.operators.retrieval import (
+    BM25_POSTING_SHARDS,
+    _write_bm25_stats,
+    _write_postings,
+    retrieval_bm25_topk_from_postings,
+    write_bm25_postings,
+)
 from newspapers_etl_spark.registry import query
+from newspapers_etl_spark.sinks import verified
 
 
 def merge_ivf_indexes(
@@ -93,7 +99,6 @@ def merge_ivf_indexes(
                 f"than {shard_paths[0]!r}; re-encode or rebuild before "
                 "merging"
             )
-    from newspapers_etl_spark.sinks.verified import current_data_path
 
     cents, codebook = models[0]
     union = reduce(
@@ -110,18 +115,13 @@ def merge_ivf_indexes(
     # 53-bit-exact window, the module docstring's standing argument).
     # Only the codes union is a real distributed write (guide §1.2/§5;
     # this removes 3 of the merge's 4 jobs).
-    from newspapers_etl_spark.functions.tinyio import (
-        read_tiny_rows,
-        write_model,
-    )
-
     write_model(f"{dest}/model/centroids", "cell", "cvec", cents)
     write_model(f"{dest}/model/codebook", "code", "kvec", codebook)
     _write_stats_local(
         f"{dest}/stats",
         _fold_stats_rows(
             *[
-                read_tiny_rows(current_data_path(f"{p}/stats"))
+                read_tiny_rows(verified.current_data_path(f"{p}/stats"))
                 for p in shard_paths
             ]
         ),
@@ -160,12 +160,6 @@ def merge_bm25_indexes(
     double-count its postings.  Shards are read through their
     generation pointers (live batches unioned, tombstones anti-joined),
     so MAINTAINED shard indexes merge correctly."""
-    from newspapers_etl_spark.operators.retrieval import (
-        BM25_POSTING_SHARDS,
-        _write_bm25_stats,
-        _write_postings,
-    )
-
     if not shard_paths:
         raise ValueError("merge_bm25_indexes needs at least one shard")
     shards = BM25_POSTING_SHARDS if shards is None else shards
@@ -187,12 +181,9 @@ def merge_bm25_indexes(
     # driver-local parquet write (functions/tinyio.py) instead of a
     # union+aggregate Spark job (guide §1.2/§5).  Shard order is the
     # deterministic fold order; exactness makes any order identical.
-    from newspapers_etl_spark.functions.tinyio import read_tiny_rows
-    from newspapers_etl_spark.sinks.verified import current_data_path
-
     n_tot, dl_tot = 0.0, 0.0
     for p in shard_paths:
-        for r in read_tiny_rows(current_data_path(f"{p}/stats")):
+        for r in read_tiny_rows(verified.current_data_path(f"{p}/stats")):
             n_tot += float(r["n"])
             dl_tot += float(r["sum_dl"] or 0.0)
     _write_bm25_stats(f"{dest}/stats", {"n": n_tot, "sum_dl": dl_tot})
@@ -317,10 +308,9 @@ def ivf_shard_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: build_ivf_index(spark, odd, pb, models=models),
     )
     merge_ivf_indexes(spark, [pa, pb], dest)
-    from newspapers_etl_spark.sinks.verified import read_current
 
     return index_cell_digest(
-        read_ivf_codes(spark, dest), read_current(spark, f"{dest}/stats")
+        read_ivf_codes(spark, dest), verified.read_current(spark, f"{dest}/stats")
     )
 
 
@@ -344,11 +334,6 @@ def bm25_shard_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials.  No model to fit (unlike ``imrg``): BM25's only cross-
     shard state IS the combinable stats pair, which is why the merge
     needs no empty-fit guard."""
-    from newspapers_etl_spark.operators.retrieval import (
-        retrieval_bm25_topk_from_postings,
-        write_bm25_postings,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     pa = scratch_index_dir("bm-mrg-a", sf_dir)
     pb = scratch_index_dir("bm-mrg-b", sf_dir)

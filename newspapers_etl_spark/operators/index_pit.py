@@ -67,18 +67,23 @@ from newspapers_etl_spark.operators.ivf_maintenance import (
     append_ivf_index,
     build_ivf_index,
     codes_fingerprint,
+    compact_ivf_codes,
     delete_from_ivf_index,
     fit_models,
     scratch_index_dir,
 )
 from newspapers_etl_spark.operators.retrieval import (
     BM25_POSTING_SHARDS,
+    _score_pruned_postings,
+    _term_shards,
     append_bm25_postings,
     bm25_oracle_sql,
+    compact_bm25_postings,
     delete_bm25_docs,
     write_bm25_postings,
 )
 from newspapers_etl_spark.registry import query
+from newspapers_etl_spark.sinks import verified
 
 # The fixture walk: base build, append the vec_id%8=3 slice (b1),
 # delete the vec_id%10=1 sub-slice OF THE BASE (d1 — membership holds:
@@ -126,8 +131,6 @@ def _as_of_view(
     ``<id>.del``/``<id>.add`` — and a repeat publish of the same
     (op, id) no-ops at the ledger, so two matches for one (op, id)
     cannot occur."""
-    from newspapers_etl_spark.sinks import verified
-
     ptr = verified.current_pointer(f"{path}/stats")
     log = list(ptr.get("ops_log", [])) if ptr else []
     matches = [
@@ -209,14 +212,8 @@ def reap_retained_epochs(path: str, keep: int = 0) -> list[str]:
     either maintained index (the pointer's root key names the kind).
     Returns the dropped epochs.  SINGLE WRITER ASSUMED, like every
     pointer maintenance step."""
-    from newspapers_etl_spark.sinks.verified import (
-        current_pointer,
-        reap_pending_roots,
-        update_pointer_meta,
-    )
-
     stats_root = f"{path}/stats"
-    ptr = current_pointer(stats_root)
+    ptr = verified.current_pointer(stats_root)
     retained = dict((ptr or {}).get("retained_epochs", {}))
     if not retained:
         return []
@@ -249,13 +246,13 @@ def reap_retained_epochs(path: str, keep: int = 0) -> list[str]:
         for t in retained[ep].get("covers", {}):
             reap.add(f"{TOMBS}{t}")
     dropped = set(drop)
-    update_pointer_meta(
+    verified.update_pointer_meta(
         stats_root,
         retained_epochs=kept,
         ops_log=[o for o in log if o.get("ep") not in dropped],
         reap_roots=sorted(reap),
     )
-    reap_pending_roots(stats_root, path)
+    verified.reap_pending_roots(stats_root, path)
     return drop
 
 
@@ -289,10 +286,6 @@ def retrieval_bm25_topk_at(
     nearest earlier pair).  Scan pruning and the scoring tail are the
     live reader's own (`_score_pruned_postings`), so an as-of read
     costs exactly what the live read cost at that moment."""
-    from newspapers_etl_spark.operators.retrieval import (
-        _score_pruned_postings,
-        _term_shards,
-    )
     prefix, postings = _as_of_view(spark, path, batch_id, BM25, op=op)
     stat = next(
         (o for o in reversed(prefix) if o.get("n") is not None), None
@@ -326,10 +319,6 @@ def ivf_point_in_time_roundtrip(
     read between d1 and the compaction returned, which is what the
     oracle replays.  Same (vec_id, cell, codes_fp) shape as
     ``ivfapp``."""
-    from newspapers_etl_spark.operators.ivf_maintenance import (
-        compact_ivf_codes,
-    )
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     models = fit_models(e.filter(F.expr(FIT_PREDICATE)))
     if not models[0] or not models[1]:
@@ -384,10 +373,6 @@ def bm25_point_in_time_roundtrip(
     bit-for-bit the ranking a live query between d1 and the compaction
     returned, which is what the oracle replays over the same corpus
     filter.  Same (doc_id, score) shape as ``bm25``."""
-    from newspapers_etl_spark.operators.retrieval import (
-        compact_bm25_postings,
-    )
-
     path = scratch_index_dir("bm-pit", sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     write_bm25_postings(spark, None, path, docs=docs.filter(F.expr(BM_PIT_BASE)))

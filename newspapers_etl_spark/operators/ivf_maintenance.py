@@ -65,14 +65,26 @@ from newspapers_etl_spark.functions.lloyd_sql import (
     SQL_DOT,
     lloyd_centroid_ctes,
 )
+from newspapers_etl_spark.functions.tinyio import (
+    ivf_stats_schema,
+    read_model_rows,
+    write_model,
+    write_tiny_parquet,
+)
+from newspapers_etl_spark.operators.ivfadc import SUB_DIM
+from newspapers_etl_spark.operators.semantic_dedup import (
+    PQ_CODEBOOK,
+    PQ_SUBSPACES,
+    _nearest_code,
+)
+from newspapers_etl_spark.operators.similarity import (
+    IVF_CELLS,
+    IVF_ITERATIONS,
+    _centroids,
+    _nearest_cell,
+)
 from newspapers_etl_spark.registry import query
-
-# Oracle-side literal copies of the model constants (similarity /
-# semantic_dedup register queries at import time; importing them here
-# would splice their blocks into this module's registry slot).  Pinned
-# to the canonical values by tests/test_ivf_maintenance.py.
-_OC_CELLS, _OC_ITERS = 8, 2
-_OC_CODES, _OC_SUBS, _OC_SUB_DIM = 16, 8, 8
+from newspapers_etl_spark.sinks import verified
 
 # The fixture split: the FIT slice trains the frozen models (a deterministic
 # 1-in-8 slice — the production posture is fit-on-a-sample,
@@ -112,7 +124,7 @@ def ivf_frozen_ctes(
     return f"""nnall AS (
   SELECT vec_id, embedding FROM {source} WHERE embedding IS NOT NULL{extra}
 ),
-{lloyd_centroid_ctes(_OC_CELLS, _OC_ITERS, where=fit)},
+{lloyd_centroid_ctes(IVF_CELLS, IVF_ITERATIONS, where=fit)},
 asg AS (
   -- the FULL corpus assigned under the frozen base-fit model (argmax
   -- of the unrounded dot, ties to the smallest cell — _nearest_cell)
@@ -120,14 +132,14 @@ asg AS (
     SELECT n_.vec_id, c.cell,
            row_number() OVER (PARTITION BY n_.vec_id
                               ORDER BY {_ASG_DOT} DESC, c.cell) AS rk
-    FROM nnall n_ CROSS JOIN c{_OC_ITERS} c
+    FROM nnall n_ CROSS JOIN c{IVF_ITERATIONS} c
   ) WHERE rk = 1
 ),
 cbk AS (
-  -- frozen codebook: first {_OC_CODES} FIT-slice vectors by vec_id
+  -- frozen codebook: first {PQ_CODEBOOK} FIT-slice vectors by vec_id
   -- rank (nn is the fit slice here)
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, embedding
-  FROM (SELECT vec_id, embedding FROM nn ORDER BY vec_id LIMIT {_OC_CODES})
+  FROM (SELECT vec_id, embedding FROM nn ORDER BY vec_id LIMIT {PQ_CODEBOOK})
 ),
 enc AS (
   -- per-(vector, subspace) argmin of the 6-dp-rounded squared L2,
@@ -136,15 +148,15 @@ enc AS (
     SELECT e.vec_id, s.sub, c.code,
            row_number() OVER (PARTITION BY e.vec_id, s.sub ORDER BY
              round(list_sum(list_transform(
-               list_zip(list_slice(e.embedding, s.sub*{_OC_SUB_DIM} + 1,
-                                   s.sub*{_OC_SUB_DIM} + {_OC_SUB_DIM}),
-                        list_slice(c.embedding, s.sub*{_OC_SUB_DIM} + 1,
-                                   s.sub*{_OC_SUB_DIM} + {_OC_SUB_DIM})),
+               list_zip(list_slice(e.embedding, s.sub*{SUB_DIM} + 1,
+                                   s.sub*{SUB_DIM} + {SUB_DIM}),
+                        list_slice(c.embedding, s.sub*{SUB_DIM} + 1,
+                                   s.sub*{SUB_DIM} + {SUB_DIM})),
                z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
                     * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)))), 6),
              c.code) AS rk
     FROM nnall e
-    CROSS JOIN (SELECT unnest(range({_OC_SUBS})) AS sub) s
+    CROSS JOIN (SELECT unnest(range({PQ_SUBSPACES})) AS sub) s
     CROSS JOIN cbk c
   ) WHERE rk = 1
 )"""
@@ -188,13 +200,10 @@ def _encode(
     a deterministic function of (model, vector)).  ``with_embedding``
     keeps the raw vector so the caller can derive the stats pair from
     the SAME persisted pass instead of a join back onto the source."""
-    from newspapers_etl_spark.operators.semantic_dedup import _nearest_code
-    from newspapers_etl_spark.operators.similarity import _nearest_cell
-
     codes = F.array(
         *[
             _nearest_code(s, codebook)["code"].cast("int")
-            for s in range(len(codebook[0][1]) // _OC_SUB_DIM)
+            for s in range(len(codebook[0][1]) // SUB_DIM)
         ]
     )
     cols = [
@@ -285,11 +294,6 @@ def _write_stats_local(path: str, rows: list[tuple[int, int, list[float]]]) -> N
     write — functions/tinyio.py).  An EMPTY list (everything deleted)
     writes a typed empty file, replacing the old has_parquet_data
     fileless-root fallback: the root stays readable as zero rows."""
-    from newspapers_etl_spark.functions.tinyio import (
-        ivf_stats_schema,
-        write_tiny_parquet,
-    )
-
     write_tiny_parquet(
         path,
         {
@@ -342,8 +346,6 @@ def fit_models(
     exactly when the fit corpus has no non-null embeddings — callers
     check the already-collected models, never an extra eager job (the
     ADVICE r7 #3 guard shape)."""
-    from newspapers_etl_spark.operators.similarity import _centroids
-
     # ONE first-k pull serves both models: the codebook is the first 16
     # non-null vectors by vec_id rank and the Lloyd seeds are the first
     # 8 — the codebook's prefix — so the separate seed job inside
@@ -360,15 +362,15 @@ def fit_models(
     nn = e_fit.filter(F.col("embedding").isNotNull()).persist()
     try:
         codebook, _ = par_jobs(
-            lambda: _first_k_by_rank(nn, _OC_CODES),
+            lambda: _first_k_by_rank(nn, PQ_CODEBOOK),
             lambda: nn.write.format("noop").mode("overwrite").save(),
         )
         cents = _centroids(
             nn,
-            _OC_CELLS,
-            _OC_ITERS,
+            IVF_CELLS,
+            IVF_ITERATIONS,
             fit_fraction=1.0,
-            seeds=[(i, v) for i, v in codebook[:_OC_CELLS]],
+            seeds=[(i, v) for i, v in codebook[:IVF_CELLS]],
         )
     finally:
         nn.unpersist()
@@ -403,8 +405,6 @@ def build_ivf_index(
         # phase profile measured ~1.9 s per model write under the
         # 4-way-concurrent build, the whole per-job floor for zero
         # distributed work (guide §1.2/§5).
-        from newspapers_etl_spark.functions.tinyio import write_model
-
         write_model(f"{path}/model/centroids", "cell", "cvec", cents)
         write_model(f"{path}/model/codebook", "code", "kvec", codebook)
         # The two remaining roots are real distributed writes over the
@@ -432,10 +432,7 @@ def _read_model(
     paid two Spark jobs per read for them (~0.15-0.26 s each in the r17
     phase profile; guide §1.2/§5).  ``spark`` stays in the signature
     for the callers' sake (the read no longer needs it)."""
-    from newspapers_etl_spark.functions.tinyio import read_model_rows
-    from newspapers_etl_spark.sinks.verified import current_pointer
-
-    ptr = current_pointer(f"{path}/stats")
+    ptr = verified.current_pointer(f"{path}/stats")
     root = ptr.get("model_root", "model") if ptr else "model"
     cents = read_model_rows(f"{path}/{root}/centroids", "cell", "cvec")
     codebook = read_model_rows(f"{path}/{root}/codebook", "code", "kvec")
@@ -446,7 +443,7 @@ def _write_codes(df: DataFrame, root: str) -> None:
     """A cell-partitioned code root, one file per cell: the repartition
     ON the layout key keeps a probe's ADC read to its probed cells'
     directories (the write_bm25_postings shard discipline)."""
-    df.drop("embedding").repartition(_OC_CELLS, "cell").write.mode(
+    df.drop("embedding").repartition(IVF_CELLS, "cell").write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(root)
 
@@ -586,12 +583,7 @@ def reap_orphan_rebuilds(path: str) -> None:
     import re
     import shutil
 
-    from newspapers_etl_spark.sinks.verified import (
-        current_pointer,
-        local_fs_path,
-    )
-
-    ptr = current_pointer(f"{path}/stats")
+    ptr = verified.current_pointer(f"{path}/stats")
     live = {
         base_root(IVF, ptr).split("/")[0],
         (ptr or {}).get("model_root", "model").split("/")[0],
@@ -602,7 +594,7 @@ def reap_orphan_rebuilds(path: str) -> None:
         e.get("base", "").split("/")[0]
         for e in (ptr or {}).get("retained_epochs", {}).values()
     }
-    base = local_fs_path(path)
+    base = verified.local_fs_path(path)
     for name in os.listdir(base):
         if re.fullmatch(r"_?rebuild-\d+", name) and name not in live:
             shutil.rmtree(os.path.join(base, name), ignore_errors=True)
@@ -652,21 +644,12 @@ def rebuild_ivf_index(
     import os
     import shutil
 
-    from newspapers_etl_spark.sinks.verified import (
-        allocate_generation,
-        current_pointer,
-        local_fs_path,
-        publish_generation,
-        reap_orphan_tombstones,
-        reap_pending_roots,
-    )
-
     stats_root = f"{path}/stats"
-    ptr = current_pointer(stats_root)
+    ptr = verified.current_pointer(stats_root)
     if ptr:
-        reap_pending_roots(stats_root, path)  # heal a crashed prior reap
+        verified.reap_pending_roots(stats_root, path)  # heal a crashed prior reap
     reap_orphan_rebuilds(path)  # heal a rebuild that died pre-publish
-    reap_orphan_tombstones(path)  # heal a delete that died pre-publish
+    verified.reap_orphan_tombstones(path)  # heal a delete that died pre-publish
     live_ids = read_ivf_codes(spark, path).select("vec_id")
     # Persist the semi-joined live corpus: the Lloyd fit alone runs
     # 2·iters+1 actions over it and the encode one more — without the
@@ -691,9 +674,9 @@ def rebuild_ivf_index(
     # move the files instead of paying a read+rewrite Spark job (the
     # whole index is local-FS here, like every rename in this
     # function).
-    gen_no, gen_name = allocate_generation(stats_root)
-    os_path = local_fs_path(path)
-    gen_dst = os.path.join(local_fs_path(stats_root), gen_name)
+    gen_no, gen_name = verified.allocate_generation(stats_root)
+    os_path = verified.local_fs_path(path)
+    gen_dst = os.path.join(verified.local_fs_path(stats_root), gen_name)
     shutil.rmtree(gen_dst, ignore_errors=True)
     shutil.move(os.path.join(os_path, f"_{new_root}", "stats"), gen_dst)
     final_dir = os.path.join(os_path, new_root)
@@ -727,8 +710,8 @@ def rebuild_ivf_index(
         # score, so they need no model.
         meta["reap_roots"] = []
         meta["retained_epochs"] = retained_epoch_meta(IVF, ptr)
-    publish_generation(stats_root, gen_no, gen_name, meta=meta)
-    reap_pending_roots(stats_root, path)
+    verified.publish_generation(stats_root, gen_no, gen_name, meta=meta)
+    verified.reap_pending_roots(stats_root, path)
     return new_root
 
 
@@ -752,9 +735,7 @@ def compact_ivf_codes(
     superseded roots are reaped — ``applied_batches`` untouched so a
     late retry of a folded batch stays a no-op.  Stats move nowhere
     (compaction adds no vectors).  Returns the new root's name."""
-    from newspapers_etl_spark.sinks.verified import current_pointer
-
-    if current_pointer(f"{path}/stats") is None:
+    if verified.current_pointer(f"{path}/stats") is None:
         # Nothing was ever appended: the base root is already the whole
         # index and there is no pointer to rewrite.
         return "codes"

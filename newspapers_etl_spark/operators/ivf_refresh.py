@@ -38,10 +38,12 @@ from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
 from newspapers_etl_spark.functions.lloyd_sql import SQL_DOT
+from newspapers_etl_spark.functions.tinyio import read_tiny_rows
+from newspapers_etl_spark.operators.index_delete import IVF_DEL_PRED
 from newspapers_etl_spark.operators.ivf_maintenance import (
-    _OC_SUB_DIM,
     FIT_PREDICATE,
     IVF_FROZEN_CTES,
+    _read_model,
     build_ivf_index,
     codes_fingerprint,
     delete_from_ivf_index,
@@ -51,7 +53,10 @@ from newspapers_etl_spark.operators.ivf_maintenance import (
     rebuild_ivf_index,
     scratch_index_dir,
 )
+from newspapers_etl_spark.operators.ivfadc import SUB_DIM
+from newspapers_etl_spark.operators.similarity import _nearest_cell
 from newspapers_etl_spark.registry import query
+from newspapers_etl_spark.sinks import verified
 
 # Rebuild when more than this fraction of the index would change cells
 # under the refreshed quantizer.  A 100 TB deployment tunes this
@@ -81,8 +86,8 @@ rv AS (
   -- PQ-decoded reconstruction: the stored code's codebook slice per
   -- subspace, concatenated in subspace order
   SELECT e.vec_id,
-         flatten(list(list_slice(c.embedding, e.sub*{_OC_SUB_DIM} + 1,
-                                 e.sub*{_OC_SUB_DIM} + {_OC_SUB_DIM})
+         flatten(list(list_slice(c.embedding, e.sub*{SUB_DIM} + 1,
+                                 e.sub*{SUB_DIM} + {SUB_DIM})
                  ORDER BY e.sub)) AS rvec
   FROM enc e JOIN cbk c USING (code)
   GROUP BY e.vec_id
@@ -119,14 +124,11 @@ def refreshed_centroids(
     the combinable pair).  Driver-side division: the stats sums are
     exact doubles (see _merge_cell_stats), so the single IEEE division
     is bit-identical to any engine's sum/count."""
-    from newspapers_etl_spark.functions.tinyio import read_tiny_rows
-    from newspapers_etl_spark.sinks.verified import current_data_path
-
     # Driver-local read (tinyio): the stats pair is a cells×dim
     # relation consumed on the driver — a Spark job per read paid the
     # whole per-job floor (guide §1.2/§5).  Same rows, same cell order.
     rows = sorted(
-        read_tiny_rows(current_data_path(f"{path}/stats")),
+        read_tiny_rows(verified.current_data_path(f"{path}/stats")),
         key=lambda r: int(r["cell"]),
     )
     return [
@@ -141,14 +143,14 @@ def _decoded(codes: DataFrame, codebook: list[tuple[int, list[float]]]) -> DataF
     codebook appears ONCE in the plan, not per-code), materialized as a
     column BEFORE anything indexes it (higher-order lambdas never CSE —
     the ppl2 lesson)."""
-    m = len(codebook[0][1]) // _OC_SUB_DIM
+    m = len(codebook[0][1]) // SUB_DIM
     sub_lits = [
         F.array(
             *[
                 F.array(
                     *[
                         F.lit(float(v))
-                        for v in kvec[s * _OC_SUB_DIM:(s + 1) * _OC_SUB_DIM]
+                        for v in kvec[s * SUB_DIM:(s + 1) * SUB_DIM]
                     ]
                 )
                 for _code, kvec in codebook
@@ -178,9 +180,6 @@ def centroid_refresh_decision(
     the codes; models and refreshed centroids are bounded literals.
     An index whose codes were all deleted yields (0, 0, NULL, NULL) —
     there is nothing to churn and nothing to decide."""
-    from newspapers_etl_spark.operators.ivf_maintenance import _read_model
-    from newspapers_etl_spark.operators.similarity import _nearest_cell
-
     _cents, codebook = _read_model(spark, path)
     refreshed = refreshed_centroids(spark, path)
     if not refreshed:
@@ -233,11 +232,10 @@ def ivf_centroid_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------- rebuild
 
 # The rebuild replays as fit + frozen assignment + encode over the
-# SURVIVORS (the delete slice is index_delete.IVF_DEL_PRED, duplicated
-# here as a literal to keep this module importable standalone): the
-# whole-index generation swap changes models, so the oracle is the
-# append oracle's shape with both the corpus and the fit slice narrowed.
-REBUILD_DEL_PRED = "vec_id % 5 = 0"
+# SURVIVORS (the delete slice is index_delete's): the whole-index
+# generation swap changes models, so the oracle is the append oracle's
+# shape with both the corpus and the fit slice narrowed.
+REBUILD_DEL_PRED = IVF_DEL_PRED
 
 IVF_RB_ORACLE = f"""
 WITH {ivf_frozen_ctes(corpus_where=f"NOT ({REBUILD_DEL_PRED})")}

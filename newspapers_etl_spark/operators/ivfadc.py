@@ -41,56 +41,34 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
+from newspapers_etl_spark.functions.litfast import lit_double_matrix
 from newspapers_etl_spark.functions.lloyd_sql import (
     final_assignment_cte,
     lloyd_centroid_ctes,
     probe_cells_cte,
     residual_codebook_ctes,
 )
-from newspapers_etl_spark.functions.litfast import lit_double_matrix
+from newspapers_etl_spark.operators.semantic_dedup import (
+    EMB_DIM,
+    PQ_CODEBOOK,
+    PQ_SUBSPACES,
+    _collect_anchors,
+    _nearest_code,
+)
+from newspapers_etl_spark.operators.similarity import (
+    IVF_CELLS,
+    IVF_ITERATIONS,
+    IVF_NPROBE,
+    N_PROBES,
+    TOP_K,
+    _centroids,
+    _nearest_cell,
+)
 from newspapers_etl_spark.registry import query
 
 CB_ITERATIONS = 2  # Lloyd steps per subspace codebook
 CB_FIT_FRACTION = 0.5  # seeded sample for the fit, like the IVF quantizer
-
-# semantic_dedup and similarity register queries at import time; a
-# top-level import here would splice their registration blocks into THIS
-# module's registry slot (registry._OPERATOR_MODULES declares realized
-# order — see test_registry_registration_order_is_contiguous).  Model
-# constants and fit helpers are therefore imported lazily inside each
-# function (the dedup_scale/model_fit pattern); module attribute access
-# (tests import SUB_DIM) resolves through PEP 562 __getattr__ below.
-_SD_NAMES = frozenset(
-    {"EMB_DIM", "PQ_CODEBOOK", "PQ_SUBSPACES", "_collect_anchors", "_nearest_code"}
-)
-_SIM_NAMES = frozenset(
-    {
-        "IVF_CELLS",
-        "IVF_ITERATIONS",
-        "IVF_NPROBE",
-        "N_PROBES",
-        "TOP_K",
-        "_centroids",
-        "_nearest_cell",
-    }
-)
-
-
-def __getattr__(name: str):
-    from importlib import import_module
-
-    if name in _SD_NAMES:
-        return getattr(
-            import_module("newspapers_etl_spark.operators.semantic_dedup"), name
-        )
-    if name in _SIM_NAMES:
-        return getattr(
-            import_module("newspapers_etl_spark.operators.similarity"), name
-        )
-    if name == "SUB_DIM":
-        sd = import_module("newspapers_etl_spark.operators.semantic_dedup")
-        return sd.EMB_DIM // sd.PQ_SUBSPACES
-    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+SUB_DIM = EMB_DIM // PQ_SUBSPACES  # dims per PQ subvector
 
 
 def _residual_of(cents: list[tuple[int, list[float]]], cell):
@@ -125,11 +103,6 @@ def _seed_residual_codebook(
     on its own nearest cell.  Cell assignment mirrors _nearest_cell
     (argmax dot, ties to the smallest cell id), computed driver-side
     over K vectors × the already-pulled centroid model."""
-    from newspapers_etl_spark.operators.semantic_dedup import (
-        PQ_CODEBOOK,
-        _collect_anchors,
-    )
-
     seeds = []
     for code, vec in _collect_anchors(spark, sf_dir, k=PQ_CODEBOOK):
         _neg, _cid, cvec = min(
@@ -180,21 +153,6 @@ def fit_codebook(
     mean of SUB_DIM components — O(K*dim) floats to the driver per
     iteration, a model, not data.  Seeds are the first-K vectors, the
     fit runs on a seeded sample; everything stays deterministic."""
-    from newspapers_etl_spark.operators.semantic_dedup import (
-        EMB_DIM,
-        PQ_CODEBOOK,
-        PQ_SUBSPACES,
-        _collect_anchors,
-        _nearest_code,
-    )
-    from newspapers_etl_spark.operators.similarity import (
-        IVF_CELLS,
-        IVF_ITERATIONS,
-        _centroids,
-        _nearest_cell,
-    )
-
-    sub_dim = EMB_DIM // PQ_SUBSPACES
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
@@ -240,7 +198,7 @@ def fit_codebook(
     if not codebook:
         return []
     dim_aggs = [
-        F.avg(F.element_at("sl", d + 1)).alias(f"d{d}") for d in range(sub_dim)
+        F.avg(F.element_at("sl", d + 1)).alias(f"d{d}") for d in range(SUB_DIM)
     ]
     # Each Lloyd iteration is its own action (the collect below), so the
     # sampled fit relation — and in residual mode its cell+centering
@@ -256,7 +214,7 @@ def fit_codebook(
                     F.lit(m).alias("m"),
                     _nearest_code(m, codebook, vcol)["code"].alias("code"),
                     F.transform(
-                        F.slice(vcol, m * sub_dim + 1, sub_dim),
+                        F.slice(vcol, m * SUB_DIM + 1, SUB_DIM),
                         lambda x: x.cast("double"),
                     ).alias("sl"),
                 )
@@ -276,7 +234,7 @@ def fit_codebook(
         # bit — which can flip a rounded-to-6dp ADC distance.
         updated = {
             (int(r["m"]), int(r["code"])): [
-                round(float(r[f"d{d}"]), 9) for d in range(sub_dim)
+                round(float(r[f"d{d}"]), 9) for d in range(SUB_DIM)
             ]
             for r in rows
         }
@@ -287,7 +245,7 @@ def fit_codebook(
                     x
                     for m in range(PQ_SUBSPACES)
                     for x in updated.get(
-                        (m, code), vec[m * sub_dim : (m + 1) * sub_dim]
+                        (m, code), vec[m * SUB_DIM : (m + 1) * SUB_DIM]
                     )
                 ],
             )
@@ -301,19 +259,12 @@ def _adc_table(probe: list[float], codebook: list[tuple[int, list[float]]]) -> l
     """The probe's asymmetric-distance lookup table, flattened to
     dtab[m * PQ_CODEBOOK + code] = squared L2 distance between the
     probe's m-th subvector and that codebook entry's m-th slice.
-    Pure Python over M*K*sub_dim floats — a per-probe constant."""
-    from newspapers_etl_spark.operators.semantic_dedup import (
-        EMB_DIM,
-        PQ_CODEBOOK,
-        PQ_SUBSPACES,
-    )
-
-    sub_dim = EMB_DIM // PQ_SUBSPACES
+    Pure Python over M*K*SUB_DIM floats — a per-probe constant."""
     dtab = [0.0] * (PQ_SUBSPACES * PQ_CODEBOOK)
     for m in range(PQ_SUBSPACES):
-        q = probe[m * sub_dim : (m + 1) * sub_dim]
+        q = probe[m * SUB_DIM : (m + 1) * SUB_DIM]
         for code, vec in codebook:
-            c = vec[m * sub_dim : (m + 1) * sub_dim]
+            c = vec[m * SUB_DIM : (m + 1) * SUB_DIM]
             dtab[m * PQ_CODEBOOK + code] = sum(
                 (x - y) * (x - y) for x, y in zip(q, c)
             )
@@ -323,24 +274,10 @@ def _adc_table(probe: list[float], codebook: list[tuple[int, list[float]]]) -> l
 def _ranked_cells(probe: list[float], cents: list[tuple[int, list[float]]]) -> list[int]:
     """The probe's IVF_NPROBE nearest cells by dot product (the same
     score ``_nearest_cell`` maximises), ties to the smaller cell id."""
-    from newspapers_etl_spark.operators.similarity import IVF_NPROBE
-
     scored = sorted(
         ((-sum(x * y for x, y in zip(probe, c)), cid) for cid, c in cents),
     )
     return [cid for _neg, cid in scored[:IVF_NPROBE]]
-
-
-# Oracle-side copies of the model constants (cells/iters/probes/top-k
-# from similarity.py, codebook size/subspaces from semantic_dedup.py).
-# The canonical modules register queries at import time and ivfadc may
-# be declared BEFORE them in the driver window (registration order is
-# positional — see registry._OPERATOR_MODULES), so the oracle string,
-# which must exist at import, cannot pull them in without splicing
-# their registration blocks into this module's slot; a pytest pins
-# these copies to the canonical values (tests/test_pca_ivfadc.py).
-_OC_CELLS, _OC_ITERS, _OC_N_PROBES, _OC_NPROBE, _OC_TOP_K = 8, 2, 5, 2, 10
-_OC_CODES, _OC_SUBS, _OC_SUB_DIM = 16, 8, 8
 
 
 def _oc_sqdist(a: str, b: str) -> str:
@@ -348,8 +285,8 @@ def _oc_sqdist(a: str, b: str) -> str:
     vectors (both sides cast to DOUBLE — exact float32 promotion),
     summed in list order: the sequential fold Spark's ``_nearest_code``
     and the driver-side ``_adc_table`` both perform."""
-    lo = f"s.m*{_OC_SUB_DIM} + 1"
-    hi = f"s.m*{_OC_SUB_DIM} + {_OC_SUB_DIM}"
+    lo = f"s.m*{SUB_DIM} + 1"
+    hi = f"s.m*{SUB_DIM} + {SUB_DIM}"
     return (
         "list_sum(list_transform("
         f"list_zip(list_slice({a}, {lo}, {hi}), list_slice({b}, {lo}, {hi})), "
@@ -359,16 +296,16 @@ def _oc_sqdist(a: str, b: str) -> str:
 
 
 IVFADC_ORACLE = f"""
-WITH {lloyd_centroid_ctes(_OC_CELLS, _OC_ITERS)},
-{final_assignment_cte("corpus", f"c{_OC_ITERS}")},
-{probe_cells_cte("probes", f"c{_OC_ITERS}", _OC_N_PROBES, _OC_NPROBE)},
+WITH {lloyd_centroid_ctes(IVF_CELLS, IVF_ITERATIONS)},
+{final_assignment_cte("corpus", f"c{IVF_ITERATIONS}")},
+{probe_cells_cte("probes", f"c{IVF_ITERATIONS}", N_PROBES, IVF_NPROBE)},
 cb AS (
-  -- PQ codebook: first {_OC_CODES} non-null vectors by vec_id rank
+  -- PQ codebook: first {PQ_CODEBOOK} non-null vectors by vec_id rank
   -- (semantic_dedup._collect_anchors)
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, embedding
-  FROM (SELECT vec_id, embedding FROM nn ORDER BY vec_id LIMIT {_OC_CODES})
+  FROM (SELECT vec_id, embedding FROM nn ORDER BY vec_id LIMIT {PQ_CODEBOOK})
 ),
-subs AS (SELECT unnest(range({_OC_SUBS})) AS m),
+subs AS (SELECT unnest(range({PQ_SUBSPACES})) AS m),
 enc AS (
   -- per (vector, subspace): nearest code by 6-dp-rounded squared L2,
   -- ties to the smallest code (_nearest_code)
@@ -407,7 +344,7 @@ SELECT probe_id, vec_id, adc_dist,
        CAST(row_number() OVER (PARTITION BY probe_id
                                ORDER BY adc_dist, vec_id) AS INTEGER) AS rnk
 FROM cands
-QUALIFY rnk <= {_OC_TOP_K}
+QUALIFY rnk <= {TOP_K}
 """
 
 
@@ -441,21 +378,6 @@ def ivfadc_topk(
     — the probe relation grows by nothing (it already carries one row
     per (probe, cell)), and the corpus-side plan is unchanged: one
     map-only encode with a literal centering matrix, codes only."""
-    from newspapers_etl_spark.operators.semantic_dedup import (
-        PQ_CODEBOOK,
-        PQ_SUBSPACES,
-        _collect_anchors,
-        _nearest_code,
-    )
-    from newspapers_etl_spark.operators.similarity import (
-        IVF_CELLS,
-        IVF_ITERATIONS,
-        N_PROBES,
-        TOP_K,
-        _centroids,
-        _nearest_cell,
-    )
-
     if residual and codebook is None:
         # The default first-K codebook lives in RAW vector space;
         # quantizing residuals against it scores origin-space anchors
@@ -580,18 +502,14 @@ def ivfadc_topk(
     )
 
 
-# CB_ITERATIONS is module-local (no import-splice constraint), so the
-# oracle passes it directly instead of a literal copy (ADVICE r9 #1:
-# a hardcoded 2 here would turn a CB_ITERATIONS bump into a confusing
-# oracle hash failure instead of staying in sync).
 _R_SQL, _R_CORPUS, _R_KBOOK = residual_codebook_ctes(
-    f"c{_OC_ITERS}", _OC_CODES, _OC_SUBS, _OC_SUB_DIM, CB_ITERATIONS
+    f"c{IVF_ITERATIONS}", PQ_CODEBOOK, PQ_SUBSPACES, SUB_DIM, CB_ITERATIONS
 )
 
 IVFADC_R_ORACLE = f"""
-WITH {lloyd_centroid_ctes(_OC_CELLS, _OC_ITERS)},
-{final_assignment_cte("corpus", f"c{_OC_ITERS}")},
-{probe_cells_cte("probes", f"c{_OC_ITERS}", _OC_N_PROBES, _OC_NPROBE)},
+WITH {lloyd_centroid_ctes(IVF_CELLS, IVF_ITERATIONS)},
+{final_assignment_cte("corpus", f"c{IVF_ITERATIONS}")},
+{probe_cells_cte("probes", f"c{IVF_ITERATIONS}", N_PROBES, IVF_NPROBE)},
 {_R_SQL},
 renc AS (
   -- final residual encode under the fitted codebook (_nearest_code
@@ -601,10 +519,10 @@ renc AS (
     SELECT r.vec_id, s.m, k.code,
            row_number() OVER (PARTITION BY r.vec_id, s.m
              ORDER BY round(list_sum(list_transform(
-               list_zip(list_slice(r.rv, s.m*{_OC_SUB_DIM} + 1,
-                                   s.m*{_OC_SUB_DIM} + {_OC_SUB_DIM}),
-                        list_slice(k.kvec, s.m*{_OC_SUB_DIM} + 1,
-                                   s.m*{_OC_SUB_DIM} + {_OC_SUB_DIM})),
+               list_zip(list_slice(r.rv, s.m*{SUB_DIM} + 1,
+                                   s.m*{SUB_DIM} + {SUB_DIM}),
+                        list_slice(k.kvec, s.m*{SUB_DIM} + 1,
+                                   s.m*{SUB_DIM} + {SUB_DIM})),
                z -> (z[1] - z[2]) * (z[1] - z[2]))), 6), k.code) AS rk
     FROM {_R_CORPUS} r CROSS JOIN rsubs s CROSS JOIN {_R_KBOOK} k
   ) WHERE rk = 1
@@ -615,15 +533,15 @@ pres AS (
   SELECT pr.probe_id, pr.cell,
          list_transform(list_zip(pr.pvec, c.cvec),
                         z -> CAST(z[1] AS DOUBLE) - z[2]) AS qres
-  FROM probes pr JOIN c{_OC_ITERS} c ON pr.cell = c.cell
+  FROM probes pr JOIN c{IVF_ITERATIONS} c ON pr.cell = c.cell
 ),
 rsubd AS (
   SELECT p.probe_id, p.cell, s.m, k.code,
          list_sum(list_transform(
-           list_zip(list_slice(p.qres, s.m*{_OC_SUB_DIM} + 1,
-                               s.m*{_OC_SUB_DIM} + {_OC_SUB_DIM}),
-                    list_slice(k.kvec, s.m*{_OC_SUB_DIM} + 1,
-                               s.m*{_OC_SUB_DIM} + {_OC_SUB_DIM})),
+           list_zip(list_slice(p.qres, s.m*{SUB_DIM} + 1,
+                               s.m*{SUB_DIM} + {SUB_DIM}),
+                    list_slice(k.kvec, s.m*{SUB_DIM} + 1,
+                               s.m*{SUB_DIM} + {SUB_DIM})),
            z -> (z[1] - z[2]) * (z[1] - z[2]))) AS d
   FROM pres p CROSS JOIN rsubs s CROSS JOIN {_R_KBOOK} k
 ),
@@ -641,7 +559,7 @@ SELECT probe_id, vec_id, adc_dist,
        CAST(row_number() OVER (PARTITION BY probe_id
                                ORDER BY adc_dist, vec_id) AS INTEGER) AS rnk
 FROM rcands
-QUALIFY rnk <= {_OC_TOP_K}
+QUALIFY rnk <= {TOP_K}
 """
 
 
@@ -672,12 +590,6 @@ def ivfadc_residual_topk(
     fit→center→encode→score composition.  At 100 TB pass the sampled
     fractions (IVF_FIT_FRACTION / CB_FIT_FRACTION) — the plans are
     identical, only the fit inputs shrink."""
-    from newspapers_etl_spark.operators.similarity import (
-        IVF_CELLS,
-        IVF_ITERATIONS,
-        _centroids,
-    )
-
     # Null embeddings cannot seed a quantizer; an empty corpus yields
     # an empty model, caught on the collected model itself (no extra
     # eager job — ADVICE r7 #3, same shape as ivfadc_topk's guard).

@@ -24,14 +24,6 @@ round-9 notes).  At 100 TB pass ``fit_fraction`` (IVF_FIT_FRACTION /
 CB_FIT_FRACTION) — sampling the fit input is the production parameter;
 the plans are identical.  ``fit_pca`` stays rows-only: the driver eigh
 has no SQL replay.
-
-Lazy imports for the FIT functions: the source modules register their
-own queries at import time, and a top-level import here would splice
-their blocks into this module's registry slot
-(test_registry_registration_order_is_contiguous_per_module).  The
-oracle strings need the model constants at import time, so they use
-literal copies (the ivfadc _OC_* pattern) pinned to the canonical
-values by tests/test_model_fit_oracle.py.
 """
 
 from __future__ import annotations
@@ -43,20 +35,20 @@ from newspapers_etl_spark.functions.lloyd_sql import (
     centroid_model_rows_sql,
     pq_model_rows_sql,
 )
+from newspapers_etl_spark.operators.ivfadc import CB_ITERATIONS, SUB_DIM, fit_codebook
+from newspapers_etl_spark.operators.pca import PCA_K, fit_pca
+from newspapers_etl_spark.operators.semantic_dedup import (
+    N_ANCHORS,
+    PQ_CODEBOOK,
+    PQ_SUBSPACES,
+    fit_anchors,
+)
 from newspapers_etl_spark.registry import query
 
-# Oracle-side literal copies of the model constants (semantic_dedup /
-# similarity / ivfadc register queries at import time and sit BEHIND
-# this module in the r10 window, so the oracle strings cannot import
-# them without splicing registration order); pinned to the canonical
-# values by test_model_fit_oracle_constants_match_canonical.
-_OC_ANCHORS, _OC_ANCHOR_ITERS = 16, 2
-_OC_CODES, _OC_SUBS, _OC_SUB_DIM, _OC_CB_ITERS = 16, 8, 8, 2
+ANCHOR_ITERS = 2  # Lloyd steps of the registered anchor fit and its oracle
 
-FIT_ANC_ORACLE = centroid_model_rows_sql(
-    _OC_ANCHORS, _OC_ANCHOR_ITERS, "anchor_id"
-)
-FIT_PQ_ORACLE = pq_model_rows_sql(_OC_CODES, _OC_SUBS, _OC_SUB_DIM, _OC_CB_ITERS)
+FIT_ANC_ORACLE = centroid_model_rows_sql(N_ANCHORS, ANCHOR_ITERS, "anchor_id")
+FIT_PQ_ORACLE = pq_model_rows_sql(PQ_CODEBOOK, PQ_SUBSPACES, SUB_DIM, CB_ITERATIONS)
 
 
 def _model_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
@@ -88,8 +80,6 @@ def fit_pq_codebook(
     fit mirrored by ``lloyd_sql.pq_model_rows_sql``; at 100 TB pass
     ``fit_fraction=CB_FIT_FRACTION`` for the seeded-sample fit (same
     plan, smaller fit input)."""
-    from newspapers_etl_spark.operators.ivfadc import fit_codebook
-
     codebook = fit_codebook(spark, sf_dir, fit_fraction=fit_fraction)
     rows = [
         (int(code), int(d), float(x))
@@ -104,8 +94,6 @@ def fit_pca_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed PCA fit: d² covariance (map-side partials, d²-key
     shuffle) + d-vector mean + driver eigh.  Output: (component, dim,
     loading, eigenvalue) — PCA_K × EMB_DIM rows."""
-    from newspapers_etl_spark.operators.pca import PCA_K, fit_pca
-
     _mean, comps, eigvals = fit_pca(spark, sf_dir, PCA_K)
     rows = [
         (int(c), int(d), float(x), float(eigvals[c]))
@@ -127,9 +115,9 @@ def fit_anchor_centroids(
     mirrored by ``lloyd_sql.centroid_model_rows_sql``; at 100 TB pass
     ``fit_fraction=IVF_FIT_FRACTION`` for the seeded-sample fit (same
     plan, smaller fit input)."""
-    from newspapers_etl_spark.operators.semantic_dedup import fit_anchors
-
-    anchors = fit_anchors(spark, sf_dir, fit_fraction=fit_fraction)
+    anchors = fit_anchors(
+        spark, sf_dir, iters=ANCHOR_ITERS, fit_fraction=fit_fraction
+    )
     rows = [
         (int(aid), int(d), float(x))
         for aid, vec in anchors

@@ -35,6 +35,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from newspapers_etl_spark.catalog import load_table
+from newspapers_etl_spark.functions.codecs import (
+    PngError,
+    decode_png,
+    decode_wav,
+    encode_png,
+    encode_wav,
+)
 from newspapers_etl_spark.functions.extraction import mime_for_filename
 from newspapers_etl_spark.registry import query
 from newspapers_etl_spark.sources.manifest import flatten_manifests
@@ -185,8 +192,6 @@ def _render_png(doc_id: int, content: bytes) -> bytes:
     closed form over the payload length (the oracle's contract) and
     whose pixels tile the payload bytes.  Every 4th doc is grayscale so
     both color types exercise the decoder."""
-    from newspapers_etl_spark.functions.codecs import encode_png
-
     n = len(content)
     width = 4 + n % 13
     height = 4 + (n * 7) % 13
@@ -226,8 +231,6 @@ def decode_image_batches(
     (functions/codecs.py:decode_png): CRC-verified chunk walk, IDAT
     inflate, filter reconstruction.  A malformed or NULL payload yields
     decode_ok=False rather than poisoning the batch."""
-    from newspapers_etl_spark.functions.codecs import PngError, decode_png
-
     for pdf in it:
         ids, ws, hs, cs, oks = [], [], [], [], []
         for doc_id, payload in zip(pdf["doc_id"], pdf["png"]):
@@ -282,8 +285,6 @@ def _render_wav(doc_id: int, content: bytes) -> bytes:
     """Deterministic fixture renderer: genuine RIFF/WAVE 16-bit PCM
     whose sample count is a closed form over the payload length and
     whose samples derive from the payload bytes."""
-    from newspapers_etl_spark.functions.codecs import encode_wav
-
     n = len(content)
     n_samples = 256 + (n * 13) % 2048
     samples = [
@@ -320,8 +321,6 @@ def sample_frame_batches(
     video/audio pipeline has (ffmpeg frame iterators, PCM windows).
     Frame rows never carry the payload, so the post-fan-out shuffle is
     skinny."""
-    from newspapers_etl_spark.functions.codecs import decode_wav
-
     for pdf in it:
         ids, idxs, feats = [], [], []
         for doc_id, payload in zip(pdf["doc_id"], pdf["wav"]):

@@ -37,10 +37,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
-# Constants are re-exported from functions.bm25_common (registers
-# nothing) so retrieval_fusion can import them WITHOUT importing this
-# module — a top-level cross-import here would splice bm25's
-# registration into the importer's registry slot.
 from newspapers_etl_spark.functions.bm25_common import (  # noqa: F401
     BM25_B,
     BM25_K1,
@@ -57,7 +53,13 @@ from newspapers_etl_spark.functions.ledger import (
     write_root_or_empty,
 )
 from newspapers_etl_spark.functions.text import words
+from newspapers_etl_spark.functions.tinyio import (
+    bm25_stats_schema,
+    read_tiny_rows,
+    write_tiny_parquet,
+)
 from newspapers_etl_spark.registry import query
+from newspapers_etl_spark.sinks import verified
 
 BM25_ORACLE = bm25_oracle_sql()
 
@@ -278,21 +280,13 @@ def _read_bm25_stats(stats_root: str) -> dict:
     generation pointer (functions/tinyio.py) — every maintenance
     publish consumes it on the driver, and a 1-row Spark job per read
     paid the whole per-job floor (guide §1.2/§5)."""
-    from newspapers_etl_spark.functions.tinyio import read_tiny_rows
-    from newspapers_etl_spark.sinks.verified import current_data_path
-
-    return read_tiny_rows(current_data_path(stats_root))[0]
+    return read_tiny_rows(verified.current_data_path(stats_root))[0]
 
 
 def _write_bm25_stats(path: str, stats: dict) -> None:
     """Land an (n, sum_dl) pair as a stats generation with one
     driver-local parquet write — same layout, atomic temp+rename;
     visibility still gates on the caller's pointer publish."""
-    from newspapers_etl_spark.functions.tinyio import (
-        bm25_stats_schema,
-        write_tiny_parquet,
-    )
-
     sum_dl = stats["sum_dl"]
     write_tiny_parquet(
         path,
@@ -515,22 +509,16 @@ def compact_bm25_postings(
 
     SINGLE WRITER ASSUMED, like every pointer maintenance step —
     serialize compactions with appends."""
-    from newspapers_etl_spark.sinks.verified import (
-        allocate_generation,
-        current_pointer,
-        publish_generation,
-    )
-
     stats_root = f"{path}/stats"
-    if current_pointer(stats_root) is None:
+    if verified.current_pointer(stats_root) is None:
         # No append has ever published a pointer: republish the current
         # stats through a generation first so there is a pointer to
         # carry the root metadata (also upgrades a legacy root layout).
         # One row in, one row out — driver-local I/O (tinyio), no jobs.
         row = _read_bm25_stats(stats_root)
-        gen_no, new_name = allocate_generation(stats_root)
+        gen_no, new_name = verified.allocate_generation(stats_root)
         _write_bm25_stats(f"{stats_root}/{new_name}", row)
-        publish_generation(stats_root, gen_no, new_name)
+        verified.publish_generation(stats_root, gen_no, new_name)
     return compact(
         spark,
         path,
@@ -602,9 +590,7 @@ def retrieval_bm25_topk_from_postings(
     # resolves the generation pointer an append may have published
     # (legacy root layout before any append — read_current handles
     # both).
-    from newspapers_etl_spark.sinks.verified import read_current
-
-    stats = read_current(spark, f"{path}/stats").select(
+    stats = verified.read_current(spark, f"{path}/stats").select(
         "n",
         # n can be 0 on an empty or fully-deleted index — the hit
         # stream is empty then too, so avgdl is never consumed; the

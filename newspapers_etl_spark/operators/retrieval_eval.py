@@ -32,19 +32,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
-from newspapers_etl_spark.functions.text import words
-# The shared batch constants live in the non-registering
-# functions.bm25_common module (moved there in r10): this module leads
-# the r10 window while retrieval_fusion sits in the tail, so a
-# top-level fusion import here would splice bm25b/rrf into this
-# module's registry slot (pinned by
-# test_registry_registration_order_is_contiguous).
 from newspapers_etl_spark.functions.bm25_common import (
     BM25_BATCH_K,
     BM25_BATCH_ORACLE,
     BM25_BATCH_QUERIES,
     BM25_BATCH_VALUES,
 )
+from newspapers_etl_spark.functions.text import words
+from newspapers_etl_spark.operators.retrieval import bm25_batch_topk_over
 from newspapers_etl_spark.registry import query
 
 NDCG_ORACLE = rf"""
@@ -99,8 +94,6 @@ def retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e9-integer-scaled before the BIGINT sum so the cross-engine total
     is summation-order-independent; the ideal ordering tie-breaks on
     doc_id so both engines rank identically."""
-    from newspapers_etl_spark.operators.retrieval import bm25_batch_topk_over
-
     d = load_table(spark, sf_dir, "documents")
     ranked = bm25_batch_topk_over(d, BM25_BATCH_QUERIES, k=BM25_BATCH_K)
 

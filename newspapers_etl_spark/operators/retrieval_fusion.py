@@ -33,12 +33,6 @@ Scale design:
   drop-in at 100 TB — the fusion sees only (doc_id, rank).
 - Totality: an empty/null-text corpus yields empty pools and an empty
   fusion — no literal-model collects anywhere on the path.
-
-Declared at the TAIL of registry._OPERATOR_MODULES (post-window, the
-bm25-in-r7 precedent): both queries are NEW in r8, the window was
-designed full at exactly 50 before they landed, and displacing r5-stale
-oracle rows for unhashed newcomers would trade verified freshness —
-they are sweep- and pytest-verified this round and lead the r9 window.
 """
 
 from __future__ import annotations
@@ -47,24 +41,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
-from newspapers_etl_spark.functions.vectors import dot, l2_norm
-
-# Constants come from the non-registering functions.bm25_common module;
-# the retrieval FUNCTIONS are imported lazily inside each query (the
-# model_fit pattern) — a top-level operators.retrieval import would
-# splice bm25's registration block into THIS module's registry slot
-# (since r9 retrieval_fusion is declared first, so retrieval is NOT yet
-# imported when this module registers; pinned by
-# test_registry_registration_order_is_contiguous).
 from newspapers_etl_spark.functions.bm25_common import (  # noqa: F401 — batch
-    # constants re-exported: tests and callers historically import them
-    # from this module (they moved to bm25_common in r10 so
-    # retrieval_eval can lead the window without splicing this module's
-    # registration block into its slot).
+    # constants re-exported: tests and callers import them from here.
     BM25_BATCH_K,
     BM25_BATCH_ORACLE,
     BM25_BATCH_QUERIES,
     BM25_QUERY_TERMS,
+)
+from newspapers_etl_spark.functions.vectors import dot, l2_norm
+from newspapers_etl_spark.operators.retrieval import (
+    bm25_topk_over,
+    retrieval_bm25_batch_topk,
 )
 from newspapers_etl_spark.registry import query
 
@@ -82,10 +69,6 @@ def retrieval_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf once however many queries share a term, broadcast (df, stats,
     term→query expansion), per-query bounded-window top-k.  Output:
     (query_id, doc_id, score, rnk)."""
-    from newspapers_etl_spark.operators.retrieval import (
-        retrieval_bm25_batch_topk,
-    )
-
     return retrieval_bm25_batch_topk(
         spark, sf_dir, BM25_BATCH_QUERIES, k=BM25_BATCH_K
     )
@@ -188,8 +171,6 @@ def retrieval_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     1/(K+rank) over small integers is the identical IEEE double
     everywhere, so the fused scores hash-match the DuckDB oracle
     exactly."""
-    from newspapers_etl_spark.operators.retrieval import bm25_topk_over
-
     docs = load_table(spark, sf_dir, "documents")
     # Lexical pool: keep_rank ranks by the EXACT (s9 DESC, doc_id) key
     # the pool is selected by — rank and pool cannot disagree at a 6-dp

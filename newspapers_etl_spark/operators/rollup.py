@@ -25,6 +25,10 @@ from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
 from newspapers_etl_spark.registry import query
+from newspapers_etl_spark.streaming.incremental_stream import (
+    read_events_stream,
+    run_available_now,
+)
 
 ROLLUP_ORACLE = """
 SELECT time_bucket(INTERVAL 1 HOUR, ts) AS bucket,
@@ -118,11 +122,6 @@ def stream_maintained_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the incrementally-upserted partials table; the merge query is
     unchanged."""
     import tempfile
-
-    from newspapers_etl_spark.streaming.incremental_stream import (
-        read_events_stream,
-        run_available_now,
-    )
 
     stream = read_events_stream(
         spark, sf_dir, glob="events.parquet", ts_encoding="auto"

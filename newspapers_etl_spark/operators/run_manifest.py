@@ -39,6 +39,25 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
+from newspapers_etl_spark.functions.scd import scd2_as_of
+from newspapers_etl_spark.operators.corpus import SPLIT_TEST_BELOW, SPLIT_VAL_BELOW
+from newspapers_etl_spark.operators.index_pit import (
+    IVF_PIT_ORACLE,
+    PIT_B1_PRED,
+    PIT_DEL_PRED,
+    read_ivf_codes_at,
+)
+from newspapers_etl_spark.operators.ivf_maintenance import (
+    BASE_PREDICATE,
+    FIT_PREDICATE,
+    append_ivf_index,
+    build_ivf_index,
+    codes_fingerprint,
+    delete_from_ivf_index,
+    fit_models,
+    scratch_index_dir,
+)
+from newspapers_etl_spark.operators.scd import _merged_customer_history
 from newspapers_etl_spark.registry import query
 
 MANIFEST_SCHEMA = "artifact string, part string, n bigint, digest string"
@@ -81,22 +100,6 @@ def _index_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two levels keep the collect bounded: no group ever gathers more
     than one cell's row hashes, and the final combine sees one 32-char
     digest per cell."""
-    from newspapers_etl_spark.operators.index_pit import (
-        PIT_B1_PRED,
-        PIT_DEL_PRED,
-        read_ivf_codes_at,
-    )
-    from newspapers_etl_spark.operators.ivf_maintenance import (
-        BASE_PREDICATE,
-        FIT_PREDICATE,
-        append_ivf_index,
-        build_ivf_index,
-        codes_fingerprint,
-        delete_from_ivf_index,
-        fit_models,
-        scratch_index_dir,
-    )
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     models = fit_models(e.filter(F.expr(FIT_PREDICATE)))
     if not models[0] or not models[1]:
@@ -137,15 +140,6 @@ def training_run_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full manifest for the fixture run — see the module
     docstring.  Every leg is a separate bounded aggregate; the union is
     a handful of rows."""
-    from newspapers_etl_spark.operators.corpus import (
-        SPLIT_TEST_BELOW,
-        SPLIT_VAL_BELOW,
-    )
-    from newspapers_etl_spark.operators.scd import (
-        _merged_customer_history,
-    )
-    from newspapers_etl_spark.functions.scd import scd2_as_of
-
     docs = load_table(spark, sf_dir, "documents")
     corpus = manifest_digest(
         docs, "corpus", F.col("source"), F.md5(F.col("text"))
@@ -179,17 +173,7 @@ def training_run_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return index.unionByName(corpus).unionByName(split).unionByName(dim)
 
 
-def _oracle() -> str:
-    from newspapers_etl_spark.operators.corpus import (
-        SPLIT_TEST_BELOW,
-        SPLIT_VAL_BELOW,
-    )
-
-    # Deferred import would be circular at module import time is fine:
-    # index_pit is declared earlier in _OPERATOR_MODULES.
-    from newspapers_etl_spark.operators.index_pit import IVF_PIT_ORACLE
-
-    return f"""
+MANIF_ORACLE = f"""
 WITH pit AS (
 {IVF_PIT_ORACLE}
 ),
@@ -242,9 +226,6 @@ SELECT 'dim', part, CAST(count(*) AS BIGINT),
        md5(string_agg(h, '' ORDER BY h))
 FROM dim_rows GROUP BY part
 """
-
-
-MANIF_ORACLE = _oracle()
 
 
 @query("manif", oracle=MANIF_ORACLE)

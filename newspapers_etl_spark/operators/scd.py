@@ -25,10 +25,9 @@ from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
 
-# The SCD2 primitives live in functions/scd.py (no @query registrations)
-# so streaming/scd_stream.py can import them WITHOUT transitively
-# registering this module's queries in its own registry slot; they are
-# re-exported here for tests and downstream composition.
+# The SCD2 primitives live in functions/scd.py, shared with
+# streaming/scd_stream.py; they are re-exported here for tests and
+# downstream composition.
 from newspapers_etl_spark.functions.scd import (  # noqa: F401
     OPEN_END,
     SCD2_MERGE_ORACLE,

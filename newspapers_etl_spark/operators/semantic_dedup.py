@@ -51,6 +51,7 @@ from newspapers_etl_spark.functions.litfast import (
     sql_doubles,
 )
 from newspapers_etl_spark.functions.vectors import dot, l2_norm
+from newspapers_etl_spark.operators.similarity import _centroids
 from newspapers_etl_spark.registry import query
 
 N_ANCHORS = 16          # anchor set: first 16 by vec_id rank (oracle-mirrored)
@@ -122,8 +123,6 @@ def fit_anchors(
     passes through to ``_centroids`` (None keeps its sampled default;
     1.0 is the exact fit the DuckDB Lloyd mirror can replay —
     functions/lloyd_sql.py)."""
-    from newspapers_etl_spark.operators.similarity import _centroids
-
     e = load_table(spark, sf_dir, "embeddings")
     cents = (
         _centroids(e, k, iters)

@@ -1,13 +1,6 @@
 """Session-window constants shared by the batch query
 (operators/events_windows.py) and its streaming twin
-(streaming/incremental_stream.py).
-
-Lives in its own module so the streaming module can build its oracle at
-import time WITHOUT importing events_windows — importing an operator
-module registers its queries, and a transitive import from inside
-another module's registration would splice those queries into the wrong
-slot of the registry's rotation order (registry.py docstring).
-"""
+(streaming/incremental_stream.py)."""
 
 SESSION_GAP = "3 hours"
 

@@ -123,8 +123,8 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LANGS = sorted(LANG_MARKERS)  # alphabetical → deterministic tiebreak
 
-# Shared with the `lang_conf` confusion rollup (functions/text.py keeps
-# the SQL builder registration-side-effect-free).
+# Shared with the `lang_conf` confusion rollup (the SQL function lives in
+# functions/text.py).
 LANG_ID_ORACLE = lang_id_oracle_sql()
 
 

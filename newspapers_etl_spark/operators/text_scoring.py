@@ -37,7 +37,13 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from newspapers_etl_spark.catalog import load_table
-from newspapers_etl_spark.functions.text import LM_FLOOR_COUNT, words
+from newspapers_etl_spark.functions.text import (
+    LM_FLOOR_COUNT,
+    lang_id_oracle_sql,
+    words,
+)
+from newspapers_etl_spark.operators.dedup import shingles
+from newspapers_etl_spark.operators.text_analysis import text_lang_id
 from newspapers_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -118,8 +124,6 @@ def ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial count — then TakeOrderedAndProject for the top-k
     (never a global sort).  At 100 TB this is the boilerplate-discovery
     / tokenizer-vocab profiling pass: same plan, bigger partial maps."""
-    from newspapers_etl_spark.operators.dedup import shingles
-
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(words("text").alias("ts"))
     grams = toks.select(F.explode(shingles("ts")).alias("gram"))
@@ -136,10 +140,7 @@ def ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _lang_conf_oracle() -> str:
-    from newspapers_etl_spark.functions.text import lang_id_oracle_sql
-
-    return f"""
+_LANG_CONF_ORACLE = f"""
 WITH base AS ({lang_id_oracle_sql()})
 SELECT lang_true, lang_pred, CAST(count(*) AS BIGINT) AS n_docs
 FROM base
@@ -147,7 +148,7 @@ GROUP BY lang_true, lang_pred
 """
 
 
-@query("lgcf", oracle=_lang_conf_oracle())
+@query("lgcf", oracle=_LANG_CONF_ORACLE)
 def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of the marker-lexicon language classifier
     against the labeled lang column — the evaluation loop every
@@ -155,8 +156,6 @@ def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered `lgid` relation (single tokenization, argmax
     with alphabetical tie-break) and rolls it up to O(langs²) rows;
     the rollup adds one tiny shuffle on (lang_true, lang_pred)."""
-    from newspapers_etl_spark.operators.text_analysis import text_lang_id
-
     return (
         text_lang_id(spark, sf_dir)
         .groupBy("lang_true", "lang_pred")
@@ -284,11 +283,8 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Unigram LM surprisal — declared LAST in this module on purpose: the
-# driver's correctness window is positional and registration order is
-# decoration order, so the module's five r5-hashed queries re-hash in
-# the r8 window while ppl (fresh r7 row, vocab_cap round) rides at the
-# boundary just outside (rotation ledger, registry.py).
+# Unigram LM surprisal — declared LAST in this module on purpose: a
+# module's queries keep their definition order in the driver window.
 # ---------------------------------------------------------------------------
 
 UNIGRAM_PPL_ORACLE = """

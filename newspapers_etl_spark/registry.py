@@ -21,395 +21,41 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
-# Registration order matters: the driver's correctness harness checks
-# queries in registration order (capped around ~50 per round), so the
-# families with the least oracle-verification history go FIRST.
-#
-# ROTATION POLICY (one line per round, newest first):
-#   r16 (LEDGERED, execute first thing next round): the six r15
-#       post-window registrations (manif, fann, imrg, bmmrg, chnk,
-#       mxsim) lead — after the r15 driver run they are the only
-#       queries without a driver row.  Import prices verified this
-#       round: index_merge top-level-imports ivf_maintenance (+
-#       bm25_common, which registers nothing); filtered_ann imports
-#       similarity; run_manifest/chunking/late_interaction import NO
-#       operator modules (run_manifest's index_pit/corpus/scd uses are
-#       all function-level — AST-checked).  Declared order therefore:
-#       ivf_maintenance 1 (ivfapp re-hash, import price), index_merge
-#       2 (imrg + bmmrg FIRST rows), similarity 5 (re-hash, import
-#       price), filtered_ann 1 (fann FIRST), chunking 1 (chnk FIRST),
-#       late_interaction 1 (mxsim FIRST), run_manifest 1 (manif FIRST)
-#       = slots 1-12.  Then retrieval 1 (bm25 re-hash — import price
-#       for retrieval_fusion) and scd 3 (re-hash — import price for
-#       scd_stream) at 13-16, and the 19 r12-hashed riders (oldest
-#       history in the union after r15): incremental 3,
-#       snapshot_diff 1, events_analytics 3, sampling_extended 3,
-#       enrichment 1, scd_stream 1, stateful 1, retrieval_fusion 2,
-#       semantic_dedup 2 (MUST precede ivfadc: top-level import),
-#       ivfadc 2 = slots 17-35.  Tail of the window: r13-hashed
-#       oldest-first — pca 2, rollup 2, sketches 1, text_formats 4,
-#       data_quality 1, corpus 5 (slots 36-50) — the window closes on
-#       corpus's last query at slot 50 exactly, no straddle;
-#       drift_monitor 1 (displaced by bmmrg) rides.  Riding
-#       (r13-hashed, lead the r17 tail): drift_monitor 1, sampling 2,
-#       text_analysis 6, events_windows 6, pipeline 2,
-#       sinks.verified 1, dedup_scale 1, corpus_overlap 2,
-#       incremental_stream 4, retrieval_eval 1, text_lm 1; everything
-#       r14/r15-hashed rides behind them.  bmmrg (the BM25 shard-merge
-#       twin) registered LATE in r15 after the other five — inside the
-#       value-width budget wave 13b left (no rename wave needed: the
-#       bench line degrades to 1-decimal gracefully).
-#   r15 (executed, AMENDED per VERDICT r14 next-steps #2): the six r14
-#       post-window registrations lead — they are the only queries
-#       without a driver row after r14.  Import-splice constraints,
-#       worked out: delete_stream top-level-imports index_delete AND
-#       ivf_maintenance; bm25_policy imports index_delete + retrieval;
-#       index_pit imports ivf_maintenance + retrieval (bm25_common
-#       registers nothing); bm25_upkeep_stream imports index_delete +
-#       index_upsert + retrieval (so index_upsert's 2 queries re-hash
-#       early as the import price — they take r14 rows, so the re-hash
-#       is cheap).  Declared order therefore: ivf_maintenance 1 (ivfapp
-#       — import price), retrieval 1 (bm25 — import price), index_delete
-#       2 (ivfdel, bm25d — import price), index_upsert 2 (ivfup,
-#       bm25u — import price), delete_stream 1 (stdel), bm25_policy 1
-#       (bmpol), index_pit 2 (ivf_pit, bmpit), bm25_upkeep_stream 2
-#       (stbdl, stbup) = slots 1-12.  AMENDMENT (the verdict caught
-#       the original plan inverting the oldest-first rule): dedup 10
-#       takes slots 13-22 — its nine non-ddex rows (jacc/ddemb/ddspn/
-#       decon/cccl oracle-backed, lshst/lshver/shprs/shbkts
-#       rows-only) last took driver rows in r10, the OLDEST history in
-#       the union, and the original plan would have ridden them to r16+
-#       (5+ rounds stale); ddex re-hashes with its module as the
-#       contiguity price.  Then the r12-hashed stale families in their
-#       current tail order: embedding_drift 1, similarity 5 (before
-#       ann_eval), ann_eval 1, pandas_surface 3, multimodal 4,
-#       relational_extended 9, scd 3 (before scd_stream) = slots 23-48,
-#       and the diagnostics/url_ops singles close the window — slot 50
-#       lands on urlcn exactly, no straddle.  Displaced by the
-#       amendment: incremental 3, snapshot_diff 1, events_analytics 3,
-#       sampling_extended 3 (r12-hashed, 10 queries) join the
-#       already-riding enrichment/scd_stream/stateful/retrieval_fusion/
-#       ivfadc/semantic_dedup (9 queries) — all 19 r12-hashed riders
-#       lead r16 (exactly r12-old then, inside the policy bar).
-#       Everything else (r13/r14-hashed) rides behind;
-#       model_fit/extraction_queries/text_scoring/relational take r14
-#       rows and rotate again ~r17.  NEW r15 op (manif — the
-#       training-run provenance manifest, operators/run_manifest.py)
-#       registers post-window at the list tail and leads r16; its
-#       registration cost was paid by rename wave 12 ("r15" map, 16
-#       -1-char renames incl. both remaining 7-char names ivf_pit→
-#       ivfpit / text_fp→textfp — BASELINE.md), executed BEFORE the
-#       driver run so the two renamed window names land their r15 rows
-#       under the new names.  LATER r15 ops (fann metadata-filtered
-#       ANN, imrg shard-parallel index build+merge, chnk document
-#       chunking) also register post-window and lead r16 with manif;
-#       their registration cost was paid by rename wave 13 ("r15b"
-#       map, 37 underscore-drops on 6-char names — BASELINE.md), also
-#       executed before the driver run (so 20 window names land their
-#       r15 rows under wave-13 names — the wave-11/-12 precedent).
-#       mxsim (late-interaction MaxSim, operators/late_interaction.py)
-#       likewise post-window, paid by wave 13b ("r15c" map, 20
-#       underscore-drops on 5-char names + f_pq — the LAST underscored
-#       names; future registrations need value-width or new-name
-#       budget, not another drop wave).
-#   r14 (executed): the five r13 post-window registrations lead —
-#       they were the only queries without a driver row after r13.
-#       Import-splice constraints, worked out: index_upsert top-level-
-#       imports ivf_maintenance AND retrieval (both already at window
-#       slots 1-2 in r13; in r14 they again precede it, re-hashing
-#       ivf_app/bm25 a round early as the import price), bm25_stream
-#       imports retrieval + ivf_maintenance (satisfied by the same two),
-#       maintenance_policy imports ivf_maintenance + ivf_refresh (so
-#       ivf_refresh's 2 queries ALSO re-hash early), upsert_stream
-#       imports index_upsert + ivf_maintenance (satisfied).  Declared
-#       order therefore: ivf_maintenance 1, retrieval 1, ivf_refresh 2,
-#       index_upsert 2 (ivfup, bm25u), bm25_stream 1 (st_bm25),
-#       maintenance_policy 1 (mnt_pol), upsert_stream 1 (stup) =
-#       slots 1-9.  Then the r10-hashed stale families: model_fit 3,
-#       extraction_queries 8, text_scoring 6, relational 21 (slots
-#       10-47; its single r13 row expl_w rides the module), and
-#       index_delete 2 + index_stream 1 (r13-hashed, riding at 48-50
-#       for free behind their already-declared imports — slot 50
-#       closes on stivf exactly, no straddle).  Tail: r12-hashed
-#       families first (they rotate forward in r15), then the
-#       r13-window families.  NEW r14 ops (stdel streaming index
-#       deletion, bmpol BM25 maintenance-policy twin, ivf_pit/bmpit
-#       point-in-time reads of both indexes, stbdl/stbup streaming
-#       BM25 deletion/upsert — the streaming maintenance matrix closes)
-#       register post-window at the list tail and lead r15; the six
-#       registrations overflowed the 1-decimal stdout band and executed
-#       rename waves 11 + 11b ("r14"/"r14b" maps, 43 + 27 renames —
-#       BASELINE.md), so five window names changed in place: ivfapp,
-#       ivfref, stbm25, mntpol, ivfdel (+ the r10-stale families'
-#       f_/s_ moves and tail singles).
-#   r13 (executed): round 12 STALLED (one commit, no rotation), so this
-#       window IS the ledgered r12 plan, executed verbatim a round
-#       late: ivf_maintenance 1 (ivf_app — re-hashes as the import
-#       price for the three modules that top-level-import it),
-#       retrieval 1 (bm25 — same, for index_delete), index_delete 2
-#       (ivf_del, bm25d), ivf_refresh 2 (ivf_ref, ivfrb),
-#       index_stream 1 (stivf) = slots 1-7, giving the five r11
-#       lifecycle newcomers their FIRST driver rows.  Then the 39
-#       r9-hashed stale queries (pca 2, rollup 2, sketches 1,
-#       text_formats 4, data_quality 1, corpus 5, sampling 2,
-#       text_analysis 6, events_windows 6, pipeline 2,
-#       sinks.verified 1, dedup_scale 1, corpus_overlap 2,
-#       incremental_stream 4) at slots 8-46, the r10-hashed
-#       drift_monitor/retrieval_eval/text_lm singletons at 47-49, and
-#       dedup STRADDLES the boundary (ddex closes the window at slot
-#       50; its 9 siblings ride).  model_fit/extraction_queries/
-#       text_scoring and relational's 20 r10-hashed queries keep their
-#       rows and rotate in r14.  NEW r13 ops (ivfup/bm25u index
-#       upsert, st_bm25 streaming posting ingestion, mnt_pol gated
-#       maintenance-policy chain, stup streaming re-embedding upsert)
-#       registered post-window at the list tail and lead r14; their
-#       registrations executed rename waves 10 and 10b (25 + 8 renames,
-#       r13/r13b maps — BASELINE.md).
-#   r12 (STALLED — never executed; the plan below ran as r13): the
-#       four r11 union holes lead — but BOTH new
-#       modules top-level-import earlier operator modules, so the
-#       DECLARED order must put the imported modules first or their
-#       whole blocks splice (the contiguity test enforces realized ==
-#       declared): ivf_maintenance 1 (ivf_app — re-hashes a round early
-#       as the import price, the similarity-in-r11 precedent),
-#       retrieval 1 (bm25 — same), index_delete 2 (ivf_del, bm25d),
-#       ivf_refresh 2 (ivf_ref, ivfrb), index_stream 1 (stivf — its
-#       ivf_maintenance import is already satisfied) = 7 slots.  Then
-#       the 39 r9-hashed stale queries (pca 2, rollup 2, sketches 1,
-#       text_formats 4, data_quality 1, corpus 5, sampling 2,
-#       text_analysis 6, events_windows 6, pipeline 2, sinks.verified 1,
-#       dedup_scale 1, corpus_overlap 2, incremental_stream 4) = 46,
-#       drift_monitor 1 + retrieval_eval 1 + text_lm 1 = 49, and dedup
-#       STRADDLES the boundary (the expl_wrd trick: its first query
-#       ddex closes the window at slot 50, the other 9 ride).
-#       model_fit/extraction/text_scoring and relational keep their
-#       r11/r10 rows and rotate in r13.
-#       Any NEW r12 registration triggers rename wave 10 (candidates in
-#       BASELINE.md; line ~1966/1990).
-#   r11 (executed): the three r10 union holes lead — ivf_maintenance 1
-#       (ivf_app), embedding_drift 1 (drift_emb), similarity 5
-#       (declared before ann_eval, whose top-level import would
-#       otherwise splice the 5-query block; similarity re-hashes a
-#       round early as the price), ann_eval 1 (ivf_rec) — then
-#       retrieval 1 (bm25: r8 row, module changed r10 via maintenance
-#       helpers), the full 34-query r8-hashed tail (pandas_surface 3,
-#       multimodal 4, relational_extended 9, scd 3, incremental 3,
-#       diagnostics 1, url_ops 1, snapshot_diff 1, events_analytics 3,
-#       sampling_extended 3, enrichment 1, scd_stream 1, stateful 1),
-#       the oldest r9-hashed families (retrieval_fusion 2, ivfadc 2,
-#       semantic_dedup 2 = slot 49), and relational STRADDLING the
-#       boundary: expl_wrd moved to the module front (the r7 union
-#       straggler that missed the r10 cap) closes the window at slot
-#       50; its 20 r10-hashed siblings ride at 51+.  NEW r11 ops
-#       (index deletion ivf_del/bm25d, centroid refresh ivf_ref,
-#       whole-index rebuild ivfrb) register post-window at the list
-#       tail and lead r12; their registrations triggered rename waves
-#       8 and 9 (r11/r11b maps).  Window test re-pinned in the same
-#       commit (tests/test_sql_entrypoint.py).
-#   r10 (executed): drift_monitor 1 + retrieval_eval 1 (NEW r9,
-#       registered post-window — the only queries without a driver row
-#       after r9) lead.  retrieval_eval's batch constants moved to the
-#       non-registering functions.bm25_common so its old top-level
-#       retrieval_fusion import cannot splice bm25b/rrf into the
-#       window front.  Then model_fit 3 (changed r9: seed-by-rank in
-#       the shared helpers, deferred under the policy exception; in
-#       r10 fit_anc/fit_pq ALSO flip to the exact-fit defaults with
-#       the pre-staged oracles — functions/lloyd_sql.py mirrors,
-#       tests/test_model_fit_oracle.py — so the re-hash lands the
-#       deferral AND the conversion together) and text_lm 1, then the
-#       oldest r7-hashed families — dedup 10, extraction_queries 8,
-#       text_scoring 6 (ppl at its tail), relational 21 fills the
-#       window to exactly 50 (jasof is slot 50; its last query,
-#       expl_wrd, rides at slot 51 with retrieval 1 (bm25, r8) to
-#       r11).  THREE late-r10 additions register post-window (the
-#       bm25/bm25b/drift precedent) and lead r11: ivf_app (IVF index
-#       maintenance), drift_emb (embedding-space drift) and ivf_rec
-#       (ANN recall evaluation).
-#   r9 (executed): retrieval_fusion 2 (bm25b/rrf — NEW r8, registered
-#       post-window, the only queries without a driver row after r8)
-#       lead.  Then the queries CHANGED r8/r9: ivfadc 2 (r8 seed fix +
-#       9-dp rounding; r9 BOTH gain ORACLES via exact-fit defaults —
-#       the Lloyd recursion, and for ivfadc_r the residual per-subspace
-#       codebook fit too, are replayed in DuckDB SQL,
-#       functions/lloyd_sql.py), similarity 5 (ivf_topk changed
-#       r9 the same way: oracle + exact-fit default + rank seeding —
-#       VERDICT r8 #4 executed; bf_topk/cntrds/lsh_topk/ann_stats ride
-#       r8 history as the price of contiguity), semantic_dedup 2
-#       (changed r9: _collect_anchors seeds by RANK, renumbered 0..k−1
-#       — ADVICE r8 #1 — with the oracles mirroring the rank pull),
-#       pca 2 (pca_proj changed late-r8: mean rounding; emb_cov rides).
-#       Then the 30 r6-hashed queries — rollup 2, sketches 1,
-#       text_formats 4, data_quality 1, corpus 5, sampling 2,
-#       text_analysis 6, events_windows 6, pipeline 2,
-#       sinks.verified 1 — and the oldest r7-hashed SMALL families fill
-#       to exactly 50: dedup_scale 1, corpus_overlap 2,
-#       incremental_stream 4 (st_sess closes at slot 50).  dedup 10 /
-#       text_lm 1 / extraction 8 / relational 21 keep their r7 rows and
-#       rotate in r10 (the similarity/semantic_dedup preemption
-#       displaced dedup from the r8-planned fill — changed queries
-#       preempt, as always).  model_fit 3 changed r9 only through the
-#       shared seed helpers (outputs fixture-identical, sweep- and
-#       pytest-verified) and defers to r10 under the policy exception
-#       below.  Late-r9 additions: drift (PSI snapshot-drift monitor,
-#       operators/drift_monitor.py) and ndcg (retrieval-quality
-#       evaluation, operators/retrieval_eval.py), both oracle-backed,
-#       registered post-window (see the note at their declarations) —
-#       they lead r10.  Their registration would have pushed the
-#       1-decimal bench stdout line over 1990, so rename wave 5
-#       executed as prepared in BASELINE.md (ann_stats→annst,
-#       lsh_stats→lshst; "r9" map in RENAMES.json; line 1985/1990
-#       after).
-#   r8 (executed): the window is exactly 50 and every slot is earned —
-#       bm25 (NEW r7, post-window then; also CHANGED r8: exact-integer
-#       avgdl) takes slot 1 for its first driver hash row.  Then the
-#       r8-CHANGED model/UDF families, which land the four ledgered
-#       fixes in one window: (a) Lloyd determinism — TWO causes fixed:
-#       the sampled fits were never actually seeded (PySpark's
-#       sample() arg-compat shim silently drops a keyword seed when
-#       the fraction is positional — every fit sampled different rows;
-#       found by the new cross-layout determinism test, and the true
-#       root cause of the r7 pruning-test flake), plus centroid
-#       components now round to 9 dp driver-side in
-#       similarity._centroids (the residual F.avg summation-order ulp
-#       wobble); (b) isNotNull filters before every model-seed
-#       collect (_centroids, semantic_dedup._collect_anchors); (c)
-#       typed-empty results on empty corpora for the five literal-model
-#       raisers (fit_anc/fit_pq/ivf_topk/pq_codes/semdedup — ivfadc's
-#       r7 guard pattern, now checked on the already-collected model so
-#       no extra eager job); (d) None-payload guards in the three
-#       Pandas-UDF decoders (mm_decode/mm_frames/pd_chunks).  Both
-#       degenerate-input known-raiser sets are now EMPTY
-#       (tests/test_empty_input.py).  Window: similarity 5 (ivf_topk
-#       changed; bf_topk/centroids/lsh_topk/ann_stats ride r6 history
-#       as the price of contiguity) + model_fit 3 + semantic_dedup 2 +
-#       pandas_surface 3 + multimodal 4 (also r5-stale) = slots 2-18;
-#       then the r5-stale blocks — relational_extended 9, scd 3,
-#       incremental 3, diagnostics/url_ops/snapshot_diff 3,
-#       events_analytics 3, sampling_extended 3, enrichment/scd_stream/
-#       stateful 3 (slots 19-45) — and text_scoring's five r5-stale
-#       queries close the window at slots 46-50 (ppl, re-hashed r7,
-#       was MOVED to the module tail so it rides at 51 instead of
-#       burning a slot).  ivfadc 2 sit at 52-53, deliberately outside:
-#       both are rows-only with fresh r7 driver rows, their r8 change
-#       is the shared-helper rounding/guards (sweep- and
-#       pytest-verified), and displacing two r5-stale oracle-backed
-#       rows for them would trade verified freshness the union math
-#       actually needs — they lead r9 with ppl.  Late r8 additions:
-#       bm25b (one-scan batch BM25, the decontamination shape) and
-#       rrf (reciprocal-rank-fusion hybrid retrieval), both
-#       oracle-backed, registered post-window in retrieval_fusion (see
-#       the note at its declaration) — they lead the r9 window with
-#       ppl/ivfadc/ivfadc_r.  Their registration overflowed the
-#       1-decimal bench stdout line (1981/1990 before them), so rename
-#       wave 4 executed as prepared (BASELINE.md r7 notes): 13 renames,
-#       "r8" map in RENAMES.json, BENCH_REF/BENCH_SELF keys updated in
-#       the same commit.
-#   r7 (executed): CHANGED queries preempt oldest-first, so the window
-#       is: dedup 10 (sh_pairs folded into the parametric
-#       manku_neardup_pairs helper) + dedup_scale 1 (sh32 now a thin
-#       wrapper) + ivfadc 2 (ivfadc_r NEW — end-to-end residual
-#       search; lazy model imports remove the old semantic_dedup/
-#       similarity splice, so those 7 no longer ride in front) +
-#       text_lm 1 (ppl2 vocab_cap param, registered default unchanged)
-#       = 14 changed slots; then pure oldest-first r4-hashed families —
-#       extraction_queries 8, incremental_stream 4, corpus_overlap 2,
-#       relational 21 (slots 29-49; its 2 r6-fresh rows re-hash as the
-#       price of contiguity) — and text_scoring's FIRST query (ppl,
-#       CHANGED r7: vocab_cap) lands exactly at slot 50.  The planned
-#       relational_extended/scd/multimodal re-hash is displaced to r8
-#       by the changed set.  Window test updated in the same commit
-#       (tests/test_sql_entrypoint.py).  Late-r7 ORACLE-side fix
-#       (fixture-neutral, full-sweep-verified): dd_exact (in-window)
-#       and text_fp (out-of-window) oracles gained COALESCE around
-#       array_to_string — DuckDB returns NULL for an empty list where
-#       Spark returns '' — found by the generated-corpus differential
-#       (tests/test_properties.py); text_fp's Spark side is unchanged,
-#       so its r5 hash row still describes current behavior.
-#   r6 (executed): the eight r5-late registrations lead — ivfadc (also
-#       CHANGED r6: residual-PQ option), emb_cov, pca_proj, ev_rollup,
-#       st_rollup, kmv_ndv, src_csv, src_jsonl (never driver-hashed;
-#       each sweep-green + pytest-covered) — then the r6-new modules
-#       (dedup_scale: sh32; model_fit: fit_pq/fit_pca/fit_anc) and the
-#       r6-CHANGED families (semantic_dedup: _nearest_code vec param;
-#       data_quality: embedding zero-norm check), then the r3-green
-#       families whose last hash row is oldest (corpus 5 — incl.
-#       leakage, r5-new, never hashed — sampling 2, text_analysis 6,
-#       events_windows 6, pandas_surface 3, pipeline 2,
-#       sinks.verified 1 = 25; 48 total with the semantic_dedup/
-#       similarity blocks that ivfadc's top-level imports realize
-#       first), then relational's first 2 queries fill the window to
-#       exactly 50; r4/r5-hashed families
-#       ride their fresh history at the back.  Window test updated in
-#       the same commit (tests/test_sql_entrypoint.py).
-#   r5 (executed): every never-driver-hashed query enters the window —
-#       the late-r4 block (diagnostics, url_ops, text_scoring,
-#       data_quality, snapshot_diff, events_analytics, sampling_extended,
-#       st_enrich/st_scd/st_state, semantic_dedup) leads, followed by
-#       relational_extended (win_dist/cohorts new r4, never hashed) and
-#       scd (scd_enr new r4, never hashed); then the modules CHANGED
-#       this round — multimodal (real codecs for mm_decode/mm_frames)
-#       and dedup (Bloom prepass in dd_spans, checkpoint_dir in
-#       cc_clust) — then incremental (last hashed r2) closes the
-#       window at exactly 50.  corpus..pipeline/sinks (r3-green,
-#       unchanged) and the r4-re-hashed families go to the back; they
-#       rotate forward in r6.
-#   r4: relational + extraction (green r1/r2 only — oldest history) and
-#       similarity (ann_stats (ex sim_lsh_stats) never yet inside any window) lead;
-#       streaming moves up because st_sess/st_join were
-#       registered THIS round with no history; dedup follows
-#       (jaccard re-registered scale-true + dd_spans new);
-#       corpus_overlap (2 new queries) closes the window at exactly 50.
-#       incremental (r2 green, unchanged) and the r3-green family
-#       (relational_extended/corpus/sampling/text/multimodal/events/
-#       pandas/pipeline/scd/sinks) ride their history.
-#   r3: corpus..streaming (new that round) + relational_extended
-#       (agg_pctl_approx fix) + dedup (decontam/clusters new) led;
-#       relational/extraction rode on r1/r2 green history.
-# Rule of thumb: families whose last green hash row is oldest — or
-# that contain a query never checked in ANY window — go first; a query
-# changed in the current round must sit inside the first ~50.
-# EXCEPTION (codified r9, ADVICE r8 #2): a change that provably cannot
-# alter any fixture output — a degenerate-input-only guard, or a
-# refactor verified output-identical by the full oracle sweep — on a
-# query whose existing driver row is ≤1 round old MAY defer its re-hash
-# one round, with an explicit ledger note naming the queries.  Anything
-# that changes fixture values re-hashes in the round it changes, no
-# exceptions.
+# all_queries() lists queries in _OPERATOR_MODULES order, each module's
+# queries in definition order; import order plays no part.  The driver's
+# correctness harness checks queries in that order, capped around ~50
+# per round, so the list is the rotation: families whose last green
+# driver hash row is oldest, or that hold a query never checked in any
+# window, go first, and a query changed in the current round must sit
+# inside the first ~50.  A change verified output-identical by the full
+# oracle sweep, on a query whose driver row is at most one round old,
+# may defer its re-hash one round with a ledger note naming it.
+# Per-slot notes: query count, round of the last driver hash row.
 _OPERATOR_MODULES = (
-    # ---- r15 window (slots 1-50): the six r14 post-window
-    # registrations (stdel/bmpol/ivf_pit/bmpit/stbdl/stbup) get
-    # their FIRST driver rows — the only union never-green names after
-    # r14.  Import price (top-level cross-module imports; imported
-    # modules must be DECLARED first or their blocks splice):
-    # delete_stream imports index_delete + ivf_maintenance; bm25_policy
-    # imports index_delete + retrieval; index_pit imports
-    # ivf_maintenance + retrieval; bm25_upkeep_stream imports
-    # index_delete + index_upsert + retrieval; index_delete and
-    # index_upsert themselves import ivf_maintenance + retrieval.  So
-    # ivfapp/bm25/ivfdel/bm25d/ivfup/bm25u re-hash a round early
-    # (all took r14 rows — cheap).  Then dedup 10 (the r15 AMENDMENT:
-    # nine r10-stale rows, the oldest union history), then the
-    # r12-hashed stale families, closing on urlcn at slot 50 exactly. ----
-    "newspapers_etl_spark.operators.ivf_maintenance",     # 1   ivfapp hashed r14; import price (6 dependents below)
-    "newspapers_etl_spark.operators.retrieval",           # 1   bm25 hashed r14; import price
-    "newspapers_etl_spark.operators.index_delete",        # 2   ivfdel, bm25d hashed r14; import price (delete_stream, bm25_policy, bm25_upkeep_stream)
-    "newspapers_etl_spark.operators.index_upsert",        # 2   ivfup, bm25u hashed r14; import price (bm25_upkeep_stream)
-    "newspapers_etl_spark.streaming.delete_stream",       # 1   stdel: FIRST driver row (NEW r14) — slot 7
-    "newspapers_etl_spark.operators.bm25_policy",         # 1   bmpol: FIRST driver row (NEW r14) — slot 8
-    "newspapers_etl_spark.operators.index_pit",           # 2   ivf_pit, bmpit: FIRST driver rows (NEW r14) — slots 9-10
-    "newspapers_etl_spark.streaming.bm25_upkeep_stream",  # 2   stbdl, stbup: FIRST driver rows (NEW r14) — slots 11-12
-    "newspapers_etl_spark.operators.dedup",               # 10  AMENDMENT: 9 rows r10-stale (oldest union history) + ddex r13 — slots 13-22
-    "newspapers_etl_spark.operators.embedding_drift",     # 1   hashed r12 — slot 23
-    "newspapers_etl_spark.operators.similarity",          # 5   hashed r12 (must precede ann_eval: top-level import) — slots 24-28
-    "newspapers_etl_spark.operators.ann_eval",            # 1   hashed r12 — slot 29
-    "newspapers_etl_spark.operators.pandas_surface",      # 3   hashed r12 — slots 30-32
-    "newspapers_etl_spark.operators.multimodal",          # 4   hashed r12 — slots 33-36
-    "newspapers_etl_spark.operators.relational_extended", # 9   hashed r12 — slots 37-45
-    "newspapers_etl_spark.operators.scd",                 # 3   hashed r12 (must precede scd_stream) — slots 46-48
-    "newspapers_etl_spark.operators.diagnostics",         # 1   hashed r12 — slot 49
-    "newspapers_etl_spark.operators.url_ops",             # 1   hashed r12 — urlcn closes the window at slot 50
-    # ---- tail: r12-hashed riders displaced by the dedup amendment +
-    # the six families already riding — all 19 lead r16. ----
+    # ---- window (slots 1-50): the index-lifecycle families first (the
+    # six r14 registrations stdel/bmpol/ivfpit/bmpit/stbdl/stbup took
+    # their first driver rows behind the six queries they build on),
+    # then dedup (nine r10-stale rows, the oldest history), then the
+    # r12-hashed families, closing on urlcn at slot 50 exactly. ----
+    "newspapers_etl_spark.operators.ivf_maintenance",     # 1   ivfapp hashed r14
+    "newspapers_etl_spark.operators.retrieval",           # 1   bm25 hashed r14
+    "newspapers_etl_spark.operators.index_delete",        # 2   ivfdel, bm25d hashed r14
+    "newspapers_etl_spark.operators.index_upsert",        # 2   ivfup, bm25u hashed r14
+    "newspapers_etl_spark.streaming.delete_stream",       # 1   stdel: first row, slot 7
+    "newspapers_etl_spark.operators.bm25_policy",         # 1   bmpol: first row, slot 8
+    "newspapers_etl_spark.operators.index_pit",           # 2   ivfpit, bmpit: first rows
+    "newspapers_etl_spark.streaming.bm25_upkeep_stream",  # 2   stbdl, stbup: first rows
+    "newspapers_etl_spark.operators.dedup",               # 10  9 rows r10 + ddex r13
+    "newspapers_etl_spark.operators.embedding_drift",     # 1   hashed r12
+    "newspapers_etl_spark.operators.similarity",          # 5   hashed r12
+    "newspapers_etl_spark.operators.ann_eval",            # 1   hashed r12
+    "newspapers_etl_spark.operators.pandas_surface",      # 3   hashed r12
+    "newspapers_etl_spark.operators.multimodal",          # 4   hashed r12
+    "newspapers_etl_spark.operators.relational_extended", # 9   hashed r12
+    "newspapers_etl_spark.operators.scd",                 # 3   hashed r12
+    "newspapers_etl_spark.operators.diagnostics",         # 1   hashed r12
+    "newspapers_etl_spark.operators.url_ops",             # 1   hashed r12 — urlcn, slot 50
+    # ---- tail: r12-hashed riders displaced by the dedup block ----
     "newspapers_etl_spark.operators.incremental",         # 3   hashed r12
     "newspapers_etl_spark.operators.snapshot_diff",       # 1   hashed r12
     "newspapers_etl_spark.operators.events_analytics",    # 3   hashed r12
@@ -438,8 +84,8 @@ _OPERATOR_MODULES = (
     "newspapers_etl_spark.operators.drift_monitor",       # 1   hashed r13
     "newspapers_etl_spark.operators.retrieval_eval",      # 1   hashed r13
     "newspapers_etl_spark.operators.text_lm",             # 1   hashed r13
-    # ---- r14-hashed families (rotate ~r17) ----
-    "newspapers_etl_spark.operators.ivf_refresh",         # 2   hashed r14 (must precede maintenance_policy: top-level import)
+    # ---- r14-hashed families ----
+    "newspapers_etl_spark.operators.ivf_refresh",         # 2   hashed r14
     "newspapers_etl_spark.operators.model_fit",           # 3   hashed r14
     "newspapers_etl_spark.operators.extraction_queries",  # 8   hashed r14
     "newspapers_etl_spark.operators.text_scoring",        # 6   hashed r14
@@ -448,16 +94,12 @@ _OPERATOR_MODULES = (
     "newspapers_etl_spark.streaming.bm25_stream",         # 1   hashed r14
     "newspapers_etl_spark.operators.maintenance_policy",  # 1   hashed r14
     "newspapers_etl_spark.streaming.upsert_stream",       # 1   hashed r14
-    # ---- NEW r15 (registered post-window, the bm25b/drift precedent:
-    # never displace an earned slot mid-round) — lead r16.
-    # run_manifest imports index_pit + corpus + scd (all declared
-    # above, satisfied); filtered_ann imports similarity; index_merge
-    # imports ivf_maintenance (both declared above, satisfied). ----
-    "newspapers_etl_spark.operators.run_manifest",        # 1   manif (NEW r15)
-    "newspapers_etl_spark.operators.filtered_ann",        # 1   fann  (NEW r15)
-    "newspapers_etl_spark.operators.index_merge",         # 2   imrg, bmmrg (NEW r15)
-    "newspapers_etl_spark.operators.chunking",            # 1   chnk  (NEW r15)
-    "newspapers_etl_spark.operators.late_interaction",    # 1   mxsim (NEW r15)
+    # ---- registered r15, after that round's window ----
+    "newspapers_etl_spark.operators.run_manifest",        # 1   manif
+    "newspapers_etl_spark.operators.filtered_ann",        # 1   fann
+    "newspapers_etl_spark.operators.index_merge",         # 2   imrg, bmmrg
+    "newspapers_etl_spark.operators.chunking",            # 1   chnk
+    "newspapers_etl_spark.operators.late_interaction",    # 1   mxsim
 )
 
 _loaded = False
@@ -493,10 +135,14 @@ def _ensure_loaded() -> None:
 
 
 def all_queries() -> dict[str, QueryFn]:
+    """Every registered query, ordered by its module's slot in
+    _OPERATOR_MODULES (a stable sort: each module keeps its own
+    definition order)."""
     _ensure_loaded()
-    return dict(QUERIES)
+    slot = {mod: i for i, mod in enumerate(_OPERATOR_MODULES)}
+    return dict(sorted(QUERIES.items(), key=lambda kv: slot[kv[1].__module__]))
 
 
 def all_oracles() -> dict[str, str]:
-    _ensure_loaded()
-    return dict(ORACLE)
+    """Every registered oracle, in all_queries() order."""
+    return {name: ORACLE[name] for name in all_queries() if name in ORACLE}

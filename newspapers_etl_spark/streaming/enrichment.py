@@ -33,6 +33,10 @@ from pyspark.sql import functions as F
 
 from newspapers_etl_spark.catalog import load_table
 from newspapers_etl_spark.registry import query
+from newspapers_etl_spark.streaming.incremental_stream import (
+    read_events_stream,
+    run_available_now,
+)
 
 ENRICH_ORACLE = """
 SELECT c.c_mktsegment AS segment,
@@ -49,14 +53,6 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event stream inner-joined to the broadcast customer dimension on
     user_id = c_custkey, aggregated per market segment — executed by
     the streaming engine (AvailableNow, complete-mode memory sink)."""
-    # Imported lazily so this module's registration order (the driver's
-    # correctness window is positional) is not disturbed by
-    # incremental_stream's own @query registrations.
-    from newspapers_etl_spark.streaming.incremental_stream import (
-        read_events_stream,
-        run_available_now,
-    )
-
     stream = read_events_stream(
         spark, sf_dir, glob="events.parquet", ts_encoding="auto"
     )

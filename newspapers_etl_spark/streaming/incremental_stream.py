@@ -38,7 +38,9 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamReader
 
 from newspapers_etl_spark.catalog import table_path
+from newspapers_etl_spark.operators.sessions_shared import SESSION_GAP, SESSION_ORACLE
 from newspapers_etl_spark.registry import query
+from newspapers_etl_spark.streaming.stream_joins import interval_join
 
 # Declared source schema (FIXTURES.md) — streaming file sources must
 # never infer (inference re-lists and re-reads the directory).
@@ -356,8 +358,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits exactly the batch answer — and the interval bound is what
     keeps that buffered state expirable at scale (see
     streaming/stream_joins.py)."""
-    from newspapers_etl_spark.streaming.stream_joins import interval_join
-
     stream = read_events_stream(spark, sf_dir, glob="events.parquet", ts_encoding="auto")
     clicks = stream.filter(F.col("event_type") == "click")
     purchases = stream.filter(F.col("event_type") == "purchase")
@@ -377,8 +377,6 @@ def session_counts(stream: DataFrame) -> DataFrame:
     (user_id, session_window) — session windows on streams require a
     non-window grouping column, and update mode is unsupported, so the
     registered runner uses complete mode."""
-    from newspapers_etl_spark.operators.sessions_shared import SESSION_GAP
-
     return (
         stream.withWatermark("ts", WATERMARK)
         .groupBy("user_id", F.session_window("ts", SESSION_GAP).alias("w"))
@@ -396,18 +394,7 @@ def session_counts(stream: DataFrame) -> DataFrame:
     )
 
 
-def _session_oracle() -> str:
-    # sessions_shared, NOT events_windows: importing an operator module
-    # here would register its queries into THIS module's slot of the
-    # rotation order (this happened in r4 — events_* spliced themselves
-    # into the correctness window between stream_join and
-    # stream_sessions until the constants moved out).
-    from newspapers_etl_spark.operators.sessions_shared import SESSION_ORACLE
-
-    return SESSION_ORACLE
-
-
-@query("stses", oracle=_session_oracle())
+@query("stses", oracle=SESSION_ORACLE)
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows executed BY THE STREAMING ENGINE (AvailableNow,
     complete-mode memory sink) over the events parquet; the oracle is

@@ -26,6 +26,10 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from newspapers_etl_spark.registry import query
+from newspapers_etl_spark.streaming.incremental_stream import (
+    read_events_stream,
+    run_available_now,
+)
 
 STATE_SCHEMA = T.StructType(
     [
@@ -107,11 +111,6 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     execution and checkpoint resume are pinned in
     tests/test_streaming.py."""
     import tempfile
-
-    from newspapers_etl_spark.streaming.incremental_stream import (
-        read_events_stream,
-        run_available_now,
-    )
 
     stream = read_events_stream(
         spark, sf_dir, glob="events.parquet", ts_encoding="auto"

@@ -3,7 +3,8 @@
 A query that failed (negative time) in any stashed capture must refuse
 the merge — its best success would otherwise mask the flake — and a
 successful merge must be labeled ``wall_min_merged`` so the committed
-number cannot be read as a single-run wall time.
+number cannot be read as a single-run wall time.  ``--check`` must
+catch a single capture that overwrote a min-merged lineage.
 """
 
 import importlib.util
@@ -65,3 +66,37 @@ def test_merge_labels_metric_and_takes_minima(tmp_path, monkeypatch):
     assert out["captures_merged"] == 2
     # Captures consumed on success.
     assert list(mod.STASH_DIR.glob("capture_*.json")) == []
+
+
+def test_check_refuses_wall_capture_over_min_merged_lineage(
+    tmp_path, monkeypatch, capsys
+):
+    """A single ``wall`` capture over a min-merged lineage (what every
+    bench run leaves in the tree) fails --check; --restore brings the
+    newest min-merged snapshot back and --check passes again."""
+    import subprocess
+
+    mod = _load_bench_min(tmp_path, monkeypatch)
+
+    def git(*args):
+        subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t",
+             "-c", "commit.gpgsign=false", *args],
+            cwd=tmp_path, check=True, capture_output=True,
+        )
+
+    merged = {"metric": "wall_min_merged", "value": 3.5,
+              "queries": {"qa": 1.0, "qb": 2.5}}
+    git("init", "-q")
+    (tmp_path / "BENCH_SELF.json").write_text(json.dumps(merged))
+    git("add", "BENCH_SELF.json")
+    git("commit", "-q", "-m", "min-merged snapshot")
+    (tmp_path / "BENCH_SELF.json").write_text(
+        json.dumps({"metric": "wall", "value": 4.0,
+                    "queries": {"qa": 1.5, "qb": 2.5}})
+    )
+    assert mod.check() == 1
+    assert "VIOLATION" in capsys.readouterr().err
+    assert mod.restore() == 0
+    assert json.loads((tmp_path / "BENCH_SELF.json").read_text()) == merged
+    assert mod.check() == 0

@@ -156,25 +156,6 @@ def test_ivf_codes_read_prunes_probed_cells(spark, sf_dir, tmp_path):
     ), plan
 
 
-def test_model_constants_match_canonical():
-    """ivf_maintenance/embedding_drift build their oracle strings from
-    literal copies of the model constants (the canonical modules
-    register queries at import time); pin every copy (the ivfadc _OC_*
-    pattern)."""
-    import newspapers_etl_spark.operators.embedding_drift as ed
-    import newspapers_etl_spark.operators.ivf_maintenance as im
-    from newspapers_etl_spark.operators import semantic_dedup as sd
-    from newspapers_etl_spark.operators import similarity as sim
-
-    assert im._OC_CELLS == sim.IVF_CELLS
-    assert im._OC_ITERS == sim.IVF_ITERATIONS
-    assert im._OC_CODES == sd.PQ_CODEBOOK
-    assert im._OC_SUBS == sd.PQ_SUBSPACES
-    assert im._OC_SUB_DIM == sd.EMB_DIM // sd.PQ_SUBSPACES
-    assert ed._OC_CELLS == sim.IVF_CELLS
-    assert ed._OC_ITERS == sim.IVF_ITERATIONS
-
-
 def test_ivf_app_matches_oracle(spark, sf_dir, oracle):
     from newspapers_etl_spark.operators.ivf_maintenance import (
         IVF_APP_ORACLE,

@@ -56,24 +56,6 @@ def test_fit_pq_exact_matches_subspace_lloyd_mirror(spark, sf_dir, oracle):
     )
 
 
-def test_model_fit_oracle_constants_match_canonical():
-    """The oracle strings are built from literal copies of the model
-    constants (the canonical modules register queries at import time
-    and sit behind model_fit in the window, so the oracle f-strings
-    cannot import them without splicing registration order); this pins
-    every copy to its canonical value (the ivfadc _OC_* pattern)."""
-    import newspapers_etl_spark.operators.model_fit as mf
-    from newspapers_etl_spark.operators import semantic_dedup as sd
-    from newspapers_etl_spark.operators.ivfadc import CB_ITERATIONS
-
-    assert mf._OC_ANCHORS == sd.N_ANCHORS
-    assert mf._OC_ANCHOR_ITERS == 2  # fit_anchors' iters default
-    assert mf._OC_CODES == sd.PQ_CODEBOOK
-    assert mf._OC_SUBS == sd.PQ_SUBSPACES
-    assert mf._OC_SUB_DIM == sd.EMB_DIM // sd.PQ_SUBSPACES
-    assert mf._OC_CB_ITERS == CB_ITERATIONS
-
-
 def test_fit_handles_sampled_path_still_works(spark, sf_dir):
     """The 100 TB production parameter survives the flip: passing a
     sampled fit_fraction still runs the seeded-sample fit and produces

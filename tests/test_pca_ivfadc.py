@@ -326,22 +326,3 @@ def test_registered_ivfadc_r_serves_every_probe_ranked(spark, sf_dir):
         dists = [r.adc_dist for r in rs]
         assert all(d >= 0 for d in dists)
         assert dists == sorted(dists)
-
-
-def test_ivfadc_oracle_constants_match_canonical():
-    """IVFADC_ORACLE is built from literal copies of the model constants
-    (the canonical modules register queries at import time, so the
-    oracle string cannot import them without splicing registration
-    order); this pins the copies to the canonical values."""
-    import newspapers_etl_spark.operators.ivfadc as iv
-    from newspapers_etl_spark.operators import semantic_dedup as sd
-    from newspapers_etl_spark.operators import similarity as sim
-
-    assert iv._OC_CELLS == sim.IVF_CELLS
-    assert iv._OC_ITERS == sim.IVF_ITERATIONS
-    assert iv._OC_N_PROBES == sim.N_PROBES
-    assert iv._OC_NPROBE == sim.IVF_NPROBE
-    assert iv._OC_TOP_K == sim.TOP_K
-    assert iv._OC_CODES == sd.PQ_CODEBOOK
-    assert iv._OC_SUBS == sd.PQ_SUBSPACES
-    assert iv._OC_SUB_DIM == sd.EMB_DIM // sd.PQ_SUBSPACES

@@ -5,6 +5,7 @@ df.observe() must deliver streaming-safe metrics without a second scan
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
@@ -113,26 +114,39 @@ def test_bench_stdout_line_fits_capture_window():
     json.loads(wline)
 
 
-def test_registry_registration_order_is_contiguous_per_module():
-    """The driver's correctness window is the FIRST ~50 registered
-    queries, so rotation only works if each module's queries register
-    contiguously.  A module imported transitively DURING another
-    module's registration splices its queries into the wrong slot
-    (this happened in r4: stream_sessions' decorator imported
-    events_windows, injecting 6 events_* queries into the streaming
-    slot and pushing the round's new queries out of the window).
+# Modules declared late in _OPERATOR_MODULES, imported before the
+# registry is read: their queries register first, so an order that
+# followed import order would put them at the front of the window.
+_LATE_MODULES = [
+    "newspapers_etl_spark.operators.index_merge",
+    "newspapers_etl_spark.operators.run_manifest",
+    "newspapers_etl_spark.operators.relational",
+    "newspapers_etl_spark.sinks.verified",
+    "newspapers_etl_spark.streaming.scd_stream",
+]
 
-    Checked in a FRESH interpreter: inside pytest, collection imports
-    operator modules in test-file order, which scrambles registration
-    order for this process — the driver imports __spark_entry__ into a
-    clean process, and that is the order that matters."""
+
+@pytest.mark.parametrize(
+    "pre_import", [[], _LATE_MODULES], ids=["clean", "late_modules_first"]
+)
+def test_registry_registration_order_is_contiguous_per_module(pre_import):
+    """The driver's correctness window is the FIRST ~50 queries of
+    all_queries(), so rotation only works if each module's queries sit
+    contiguously, in the module order _OPERATOR_MODULES declares,
+    whatever order the modules were imported in.
+
+    Checked in a FRESH interpreter, which first imports ``pre_import``:
+    inside pytest, collection has already imported operator modules in
+    test-file order."""
     import json
     import subprocess
     import sys
     from pathlib import Path
 
     code = (
-        "import json\n"
+        "import importlib, json\n"
+        f"for m in {pre_import!r}:\n"
+        "    importlib.import_module(m)\n"
         "from newspapers_etl_spark import registry\n"
         "qs = registry.all_queries()\n"
         "print(json.dumps([[n, qs[n].__module__] for n in qs]))\n"
@@ -153,43 +167,33 @@ def test_registry_registration_order_is_contiguous_per_module():
     block_order: list[str] = []
     for m in mods:
         if m != prev:
-            assert m not in seen, (
-                f"{m} registers non-contiguously — a transitive import "
-                "during another module's registration is splicing it"
-            )
+            assert m not in seen, f"{m} registers non-contiguously"
             seen.add(m)
             block_order.append(m)
             prev = m
-    # Contiguity alone misses a WHOLE-module splice: a top-level import
-    # of a later operator module registers that module's entire block
-    # early, contiguous but in the wrong slot (scd_stream importing
-    # operators.scd did exactly this — 3 scd queries landed at the
-    # streaming position).  The realized module order must match the
-    # declared _OPERATOR_MODULES order exactly.
+    # Contiguity alone misses a whole module block in the wrong slot:
+    # the realized module order must match the declared one exactly.
     from newspapers_etl_spark.registry import _OPERATOR_MODULES
 
     declared = [m for m in _OPERATOR_MODULES if m in set(block_order)]
     assert block_order == declared, (
-        "module registration order diverges from _OPERATOR_MODULES — "
-        f"realized {block_order} vs declared {declared}; a top-level "
-        "cross-module operator import is splicing a whole block"
+        "module order diverges from _OPERATOR_MODULES — "
+        f"realized {block_order} vs declared {declared}"
     )
-    # And the r15 window design holds (rotation ledger in registry.py):
-    # the six r14 post-window registrations get their FIRST driver rows
-    # at slots 7-12 behind the six queries whose modules they top-level-
-    # import (ivfapp/bm25/ivfdel/bm25d/ivfup/bm25u at slots 1-6 —
-    # the import price), then the AMENDED dedup block (nine r10-stale
-    # rows + ddex) at slots 13-22, the r12-hashed stale families at
-    # 23-48, and diagnostics/url_ops closing the window (urlcn at 50
-    # exactly, no straddle).
+    # And the current window design holds (per-slot notes in
+    # registry.py): the six r14 registrations at slots 7-12 behind the
+    # six lifecycle queries they build on (slots 1-6), the dedup block
+    # (nine r10-stale rows + ddex) at slots 13-22, the r12-hashed
+    # families at 23-48, and diagnostics/url_ops closing the window
+    # (urlcn at 50 exactly, no straddle).
     window = set(names[:50])
     for required in (
         # the only queries with no driver hash row in the r1-r14 union
         "stdel", "bmpol", "ivfpit", "bmpit", "stbdl", "stbup",
-        # import price: their modules must precede the newcomers
+        # the lifecycle queries they build on
         "ivfapp", "bm25", "ivfdel", "bm25d", "ivfup", "bm25u",
-        # the amended dedup block: nine r10-stale rows (oldest union
-        # history) + ddex riding its module
+        # the dedup block: nine r10-stale rows (oldest union history)
+        # + ddex riding its module
         "ddex", "jacc", "ddspn", "lshst", "lshver", "ddemb",
         "shprs", "shbkts", "decon", "cccl",
         # the r12-hashed stale families
@@ -204,9 +208,9 @@ def test_registry_registration_order_is_contiguous_per_module():
     assert names[:12] == [
         "ivfapp", "bm25", "ivfdel", "bm25d", "ivfup", "bm25u",
         "stdel", "bmpol", "ivfpit", "bmpit", "stbdl", "stbup",
-    ], f"r15 lifecycle lead drifted: {names[:12]}"
+    ], f"lifecycle lead drifted: {names[:12]}"
     # urlcn closes the window at slot 50 exactly; the displaced
-    # r12-hashed riders (incremental first) ride behind and lead r16.
+    # r12-hashed riders (incremental first) ride behind it.
     assert names[49] == "urlcn", f"window boundary drifted: {names[45:52]}"
     assert names[50] == "incct", (
         f"boundary riders drifted: {names[50:53]}"
@@ -236,10 +240,8 @@ def test_queries_md_index_matches_registry():
 def test_entry_module_import_registers_nothing():
     """__spark_entry__ must stay a thin adapter: importing it (which the
     driver does before anything else) must not register a single query —
-    a module-scope operator import there would splice that operator's
-    block to the front of the registration order and silently shift the
-    driver's ~50-query correctness window (entry() resolving flagship
-    through the registry, not a direct import, is the other half)."""
+    every operator is reached through the registry, entry()'s flagship
+    included."""
     import subprocess
     import sys
     from pathlib import Path

@@ -1,4 +1,4 @@
-"""Min-merge bench captures into the committed BENCH_SELF.json.
+"""Keep the committed BENCH_SELF.json a min-merge of bench captures.
 
 The committed snapshot protocol (VERDICT r5 #6): the host shows ~16%
 intermittent noise windows, so ONE integrated capture over-reports the
@@ -14,6 +14,11 @@ Usage:
     python bench.py                      # capture 2
     python tools/bench_min.py --stash
     python tools/bench_min.py --merge    # min-merge stashes -> BENCH_SELF.json
+    python tools/bench_min.py --check    # exit 1 if the tree holds a
+                                         # single-capture 'wall' snapshot
+                                         # over a min-merged lineage
+    python tools/bench_min.py --restore  # restore BENCH_SELF.json from the
+                                         # newest min-merged commit
 
 Every stashed capture must cover the full registry (a partial capture
 would silently drop queries from the min).  --merge REFUSES when any
@@ -23,22 +28,39 @@ writes metric="wall_min_merged" so the committed number cannot be read
 as a single-run wall time.  --merge also reports any query whose merged
 minimum beats its BENCH_REF entry (fold those in deliberately —
 BENCH_REF stays the all-time best-known).
+
+Every sf0.1 bench run, the driver's own capture included, overwrites
+the working-tree BENCH_SELF.json with a single ``wall`` capture.  Run
+--restore at round start and --check before committing bench
+artifacts: a ``wall`` file must never replace a ``wall_min_merged``
+one.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import subprocess
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+NAME = "BENCH_SELF.json"
 STASH_DIR = REPO / ".bench_captures"
 
 
+def _metric(text: str | None) -> str | None:
+    """The ``metric`` label of a BENCH_SELF.json text, None if absent."""
+    if not text:
+        return None
+    try:
+        return json.loads(text).get("metric")
+    except ValueError:
+        return None
+
+
 def stash() -> int:
-    src = REPO / "BENCH_SELF.json"
-    snap = json.loads(src.read_text())
+    snap = json.loads((REPO / NAME).read_text())
     STASH_DIR.mkdir(exist_ok=True)
     # max existing index + 1, NOT the file count: after a capture is
     # hand-deleted (e.g. a known-noisy one), a count-based name would
@@ -107,7 +129,7 @@ def merge() -> int:
     out["queries"] = merged
     out["value"] = round(sum(merged.values()), 3)
     out["captures_merged"] = len(snaps)
-    (REPO / "BENCH_SELF.json").write_text(json.dumps(out, indent=1))
+    (REPO / NAME).write_text(json.dumps(out, indent=1))
     print(f"[bench_min] merged {len(snaps)} captures -> BENCH_SELF.json: "
           f"sum {out['value']}s over {len(merged)} queries")
     ref = json.loads((REPO / "BENCH_REF.json").read_text())
@@ -129,13 +151,79 @@ def merge() -> int:
     return 0
 
 
+def _git_show(ref: str) -> str | None:
+    try:
+        return subprocess.run(
+            ["git", "show", f"{ref}:{NAME}"],
+            cwd=REPO, capture_output=True, text=True, check=True,
+        ).stdout
+    except subprocess.CalledProcessError:
+        return None
+
+
+def _newest_min_merged() -> str | None:
+    """The newest commit whose BENCH_SELF.json is min-merged."""
+    revs = subprocess.run(
+        ["git", "rev-list", "HEAD", "--", NAME],
+        cwd=REPO, capture_output=True, text=True, check=True,
+    ).stdout.split()
+    for rev in revs:
+        if _metric(_git_show(rev)) == "wall_min_merged":
+            return rev
+    return None
+
+
+def _tree_metric() -> str | None:
+    path = REPO / NAME
+    return _metric(path.read_text() if path.exists() else None)
+
+
+def check() -> int:
+    tree = _tree_metric()
+    if tree == "wall_min_merged":
+        print("[bench_min] OK: working tree holds the min-merged snapshot")
+        return 0
+    src = _newest_min_merged()
+    if src is None:
+        print("[bench_min] OK: no min-merged lineage to protect")
+        return 0
+    print(
+        f"[bench_min] VIOLATION: working-tree {NAME} is metric={tree!r} "
+        f"but the lineage is min-merged (e.g. {src[:9]}) — a bench run "
+        "overwrote the committed snapshot; run "
+        "'python tools/bench_min.py --restore' (or --stash and --merge "
+        "fresh captures) before committing",
+        file=sys.stderr,
+    )
+    return 1
+
+
+def restore() -> int:
+    if _tree_metric() == "wall_min_merged":
+        print("[bench_min] nothing to do: tree snapshot is min-merged")
+        return 0
+    src = _newest_min_merged()
+    if src is None:
+        print("[bench_min] no min-merged snapshot anywhere in history",
+              file=sys.stderr)
+        return 1
+    (REPO / NAME).write_text(_git_show(src))
+    print(f"[bench_min] restored {NAME} from {src[:9]} "
+          f"(metric wall_min_merged)")
+    return 0
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     g = ap.add_mutually_exclusive_group(required=True)
-    g.add_argument("--stash", action="store_true")
-    g.add_argument("--merge", action="store_true")
+    for flag in ("--stash", "--merge", "--check", "--restore"):
+        g.add_argument(flag, action="store_true")
     args = ap.parse_args()
-    return stash() if args.stash else merge()
+    if args.stash:
+        return stash()
+    if args.merge:
+        return merge()
+    return check() if args.check else restore()
 
 
 if __name__ == "__main__":
